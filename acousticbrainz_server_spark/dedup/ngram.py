@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import repartition_if_narrow, word_bigrams
+from ..sources.tables import local_frame
 
 
 MAX_DENSE_VOCAB = 16_384
@@ -134,9 +135,10 @@ def _jaccard_dense_matmul(
     torrent-broadcast in CSR-ish packed form (ids + offsets + flat sid
     array).  Everything after that single pull is ONE distributed job:
 
-    - the **A side** is rebuilt from the collected rows (Arrow-path
-      ``createDataFrame``) and streams through ``mapInPandas`` in ~512-row
-      blocks; each block densifies itself once (block × vocab float32).
+    - the **A side** is rebuilt from the collected rows (``local_frame``, an
+      Arrow ``LocalRelation``) and streams through ``mapInPandas`` in
+      ~512-row blocks; each block densifies itself once (block × vocab
+      float32).
     - the **B side** is densified one TILE at a time INSIDE the kernel,
       executor-side, from the sparse broadcast.  Per-task memory holds one
       dense tile (≤ ``max_tile_cells`` floats ≈ 256 MB) plus the A block;
@@ -175,9 +177,7 @@ def _jaccard_dense_matmul(
             F.countDistinct("doc").alias("n_docs"), F.countDistinct("s").alias("vocab_size")
         ).first()
         n_docs, vocab_size = stats["n_docs"] or 0, stats["vocab_size"] or 0
-    empty = spark.createDataFrame(
-        [], "doc_a LONG, doc_b LONG, n_inter LONG, n_a LONG, n_b LONG, jaccard DOUBLE"
-    )
+    empty = local_frame(spark, [], "doc_a LONG, doc_b LONG, n_inter LONG, n_a LONG, n_b LONG, jaccard DOUBLE")
     if n_docs == 0 or vocab_size == 0:
         sh.unpersist(blocking=False)
         return empty
@@ -202,13 +202,9 @@ def _jaccard_dense_matmul(
 
     # ~512-row A blocks: enough tasks to spread the sgemm, few enough that
     # per-task Python-worker + broadcast-fetch overhead stays negligible.
-    # plain-python-int lists: createDataFrame's non-Arrow fallback verifier
-    # rejects numpy ints in an ARRAY<INT> field (round-3 red), and .tolist()
-    # converts on BOTH the Arrow and fallback paths
     n_part = max(1, min(spark.sparkContext.defaultParallelism, (n_docs + 511) // 512))
-    a_side = spark.createDataFrame(
-        pd.DataFrame({"doc": ids, "sids": [s.tolist() for s in sid_lists]}),
-        "doc LONG, sids ARRAY<INT>",
+    a_side = local_frame(
+        spark, zip(ids.tolist(), (s.tolist() for s in sid_lists)), "doc LONG, sids ARRAY<INT>"
     ).repartition(n_part)
     del sid_lists, lens
 

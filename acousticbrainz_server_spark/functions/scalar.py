@@ -9,8 +9,6 @@ Always round any float column that crosses the oracle boundary.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -78,16 +76,6 @@ def sql_format_length_long(expr: str) -> str:
         f"WHEN {m} >= 1 THEN concat(CAST({m} AS VARCHAR), ':', {ss}) "
         f"ELSE concat('00:', {ss}) END)"
     )
-
-
-# --- F9/F11: circular embedding (reference similarity/metrics.py:89-96, 120-140) -----
-TWO_PI = 2.0 * math.pi
-
-
-def circle_embedding(value: Column) -> tuple[Column, Column]:
-    """[cos(2*pi*v), sin(2*pi*v)] — used for key / bpm / onset-rate metrics."""
-    angle = value * F.lit(TWO_PI)
-    return F.cos(angle), F.sin(angle)
 
 
 # --- F3: slugify (reference db/dataset.py:14-21) --------------------------------------

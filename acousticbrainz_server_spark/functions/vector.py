@@ -45,9 +45,3 @@ def zscore(x: Column, means: Column, stddevs: Column) -> Column:
         stddevs,
         lambda d, s: F.when(s != 0.0, d / s).otherwise(d),
     )
-
-
-def decay_weights(x: Column, base: float = 0.95) -> Column:
-    """Geometric per-index decay x[i] * base**i
-    (reference similarity/metrics.py:48-58, weighted mfcc/gfcc)."""
-    return F.transform(x, lambda v, i: v * F.pow(F.lit(base), i.cast("double")))

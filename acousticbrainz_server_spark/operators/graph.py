@@ -64,13 +64,12 @@ def pagerank(
     (iterations are ~0.1 s each at 1.2M edges), so trimming setup jobs
     matters more than the loop.
 
-    Caching contract (r12): with ``symmetric=True`` the decorated O(|E|)
-    edge relation is hash-partitioned and ``cache()``d so every iteration
-    reuses its partitioning with zero exchanges; the returned DataFrame is
-    a lazy-checkpoint chain over that cache, so the cache must outlive the
-    caller's action.  Long-lived sessions composing many graph calls should
-    ``spark.catalog.clearCache()`` between them (the bench/gate harnesses
-    do).
+    Caching contract: with ``symmetric=True`` the decorated O(|E|) edge
+    relation is hash-partitioned and ``cache()``d so every iteration reuses
+    its partitioning with zero exchanges.  The last round's checkpoint is
+    eager, so the returned ranks no longer reference the cache, and the
+    cache is released in ``finally`` (as ``connected_components`` does): a
+    raising round cannot leak it for the session lifetime.
     """
     deg = edges.groupBy(src).agg(F.count(F.lit(1)).alias("outdeg")).localCheckpoint(eager=False)
     if symmetric:
@@ -110,35 +109,38 @@ def pagerank(
         ed = edges.join(deg, src).localCheckpoint(eager=False)
     ranks = nodes.withColumn("pr", F.lit(1.0))
     maybe_bc = F.broadcast if broadcast_ranks else (lambda df: df)
-    for _ in range(iterations):
-        r = maybe_bc(ranks)
-        contrib = ed.join(r, ed[src] == r["node"]).select(
-            F.col(dst).alias("node"), (F.col("pr") / F.col("outdeg")).alias("c")
-        )
-        # seed every node with a 0.0 contribution instead of left-joining the
-        # node list afterwards: one shuffle per iteration, no second join
-        # (x + 0.0 == x in IEEE754, so the seed never perturbs the sum)
-        seeded = (
-            contrib
-            if symmetric
-            else contrib.unionByName(nodes.select("node", F.lit(0.0).alias("c")))
-        )
-        total = seeded.groupBy("node").agg(F.sum("c").alias("contrib"))
-        if has_dangling:
-            # rank sitting on nodes with no out-edges is spread uniformly
-            # (1-row aggregate cross-joined, not collected)
-            dm = (
-                dangling_nodes.join(maybe_bc(ranks), "node")
-                .agg(F.coalesce(F.sum("pr"), F.lit(0.0)).alias("dm"))
+    try:
+        for i in range(iterations):
+            r = maybe_bc(ranks)
+            contrib = ed.join(r, ed[src] == r["node"]).select(
+                F.col(dst).alias("node"), (F.col("pr") / F.col("outdeg")).alias("c")
             )
-            total = total.crossJoin(F.broadcast(dm)).withColumn(
-                "contrib", F.col("contrib") + F.col("dm") / F.lit(float(n_nodes))
+            # seed every node with a 0.0 contribution instead of left-joining
+            # the node list afterwards: one shuffle per iteration, no second
+            # join (x + 0.0 == x in IEEE754, so the seed never perturbs the sum)
+            seeded = (
+                contrib
+                if symmetric
+                else contrib.unionByName(nodes.select("node", F.lit(0.0).alias("c")))
             )
-        ranks = total.select(
-            "node",
-            (F.lit(1.0 - damping) + F.lit(damping) * F.col("contrib")).alias("pr"),
-        ).localCheckpoint(eager=False)
-    return ranks
+            total = seeded.groupBy("node").agg(F.sum("c").alias("contrib"))
+            if has_dangling:
+                # rank sitting on nodes with no out-edges is spread uniformly
+                # (1-row aggregate cross-joined, not collected)
+                dm = (
+                    dangling_nodes.join(maybe_bc(ranks), "node")
+                    .agg(F.coalesce(F.sum("pr"), F.lit(0.0)).alias("dm"))
+                )
+                total = total.crossJoin(F.broadcast(dm)).withColumn(
+                    "contrib", F.col("contrib") + F.col("dm") / F.lit(float(n_nodes))
+                )
+            ranks = total.select(
+                "node",
+                (F.lit(1.0 - damping) + F.lit(damping) * F.col("contrib")).alias("pr"),
+            ).localCheckpoint(eager=i == iterations - 1)
+        return ranks
+    finally:
+        ed.unpersist()
 
 
 def label_propagation(
@@ -166,31 +168,35 @@ def label_propagation(
     is not), and hash(dst) satisfies the clustering of BOTH per-round
     aggregates (``(dst, label)`` and ``dst``), so every round runs with
     zero exchanges: broadcast join + in-place aggregation over the cached
-    partitions.  Interleaved A/B at sf0.1: 4.0-6.9 s -> 3.1-3.3 s.  The
-    cache lives until the caller's action (the rounds are lazy
-    checkpoints); gate/bench harnesses clear caches between queries.
+    partitions.  Interleaved A/B at sf0.1: 4.0-6.9 s -> 3.1-3.3 s.  The last
+    round's checkpoint is eager, so the returned labels no longer reference
+    the cache, which is released in ``finally`` (same contract as
+    :func:`pagerank`).
     """
     edges = edges.repartition(F.col(dst)).cache()
-    labels = edges.select(F.col(src).alias("node")).distinct().select(
-        "node", F.col("node").alias("label")
-    ).localCheckpoint(eager=False)
-    for _ in range(iterations):
-        lbl = F.broadcast(labels) if broadcast_labels else labels
-        counts = (
-            edges.join(lbl, edges[src] == lbl["node"])
-            .groupBy(F.col(dst), F.col("label"))
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        # (count desc, label asc) argmax fused into the aggregate as
-        # max(struct(cnt, -label)) — one shuffle per round instead of the
-        # agg + rank-window pair
-        labels = (
-            counts.groupBy(F.col(dst).alias("node"))
-            .agg(F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("nl"))).alias("m"))
-            .select("node", (-F.col("m.nl")).alias("label"))
-            .localCheckpoint(eager=False)
-        )
-    return labels
+    try:
+        labels = edges.select(F.col(src).alias("node")).distinct().select(
+            "node", F.col("node").alias("label")
+        ).localCheckpoint(eager=False)
+        for i in range(iterations):
+            lbl = F.broadcast(labels) if broadcast_labels else labels
+            counts = (
+                edges.join(lbl, edges[src] == lbl["node"])
+                .groupBy(F.col(dst), F.col("label"))
+                .agg(F.count(F.lit(1)).alias("cnt"))
+            )
+            # (count desc, label asc) argmax fused into the aggregate as
+            # max(struct(cnt, -label)) — one shuffle per round instead of the
+            # agg + rank-window pair
+            labels = (
+                counts.groupBy(F.col(dst).alias("node"))
+                .agg(F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("nl"))).alias("m"))
+                .select("node", (-F.col("m.nl")).alias("label"))
+                .localCheckpoint(eager=i == iterations - 1)
+            )
+        return labels
+    finally:
+        edges.unpersist()
 
 
 def copurchase_edges(

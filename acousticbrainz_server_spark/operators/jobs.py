@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..sources.tables import local_frame
+
 JOB_STATUSES = ["pending", "running", "done", "failed"]  # db/dataset_eval.py:11-14
 
 JOB_EVENT_SCHEMA = T.StructType(
@@ -67,7 +69,7 @@ def transition(
     if new_status not in JOB_STATUSES:
         raise ValueError(f"unknown status {new_status!r}")
     row = [{"job_id": job_id, "snapshot_id": None, "status": new_status, "ts": ts, "result": result}]
-    return events.unionByName(spark.createDataFrame(row, JOB_EVENT_SCHEMA), allowMissingColumns=True)
+    return events.unionByName(local_frame(spark, row, JOB_EVENT_SCHEMA), allowMissingColumns=True)
 
 
 # --- V7: similarity eval results / feedback store ------------------------------------

@@ -17,12 +17,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _local_frame(spark: SparkSession, data: dict) -> DataFrame:
-    """pandas-backed literal frame -> JVM LocalTableScan (no Python-RDD path)."""
-    import pandas as pd
-
-    return spark.createDataFrame(pd.DataFrame(data))
+from ..sources.tables import local_frame
 
 
 def get_ids_by_mbids(
@@ -32,13 +27,10 @@ def get_ids_by_mbids(
 ) -> DataFrame:
     """(request_index, gid, submission_offset, id|NULL) in request order;
     gids are lower-cased like the reference (db/data.py:853-879)."""
-    req = _local_frame(
+    req = local_frame(
         spark,
-        {
-            "request_index": list(range(len(mbid_offsets))),
-            "gid": [g.lower() for g, _ in mbid_offsets],
-            "submission_offset": [int(o) for _, o in mbid_offsets],
-        },
+        [(i, g.lower(), int(o)) for i, (g, o) in enumerate(mbid_offsets)],
+        "request_index BIGINT, gid STRING, submission_offset BIGINT",
     )
     hit = lowlevel.join(F.broadcast(req), ["gid", "submission_offset"], "inner").select(
         "request_index", "id"
@@ -54,7 +46,7 @@ def get_mbids_by_ids(
     ids: Sequence[int],
 ) -> DataFrame:
     """(request_index, id, gid|NULL, submission_offset|NULL) in request order."""
-    req = _local_frame(spark, {"request_index": list(range(len(ids))), "id": [int(v) for v in ids]})
+    req = local_frame(spark, [(i, int(v)) for i, v in enumerate(ids)], "request_index BIGINT, id BIGINT")
     hit = lowlevel.join(F.broadcast(req), "id", "inner").select("request_index", "gid", "submission_offset")
     return req.join(F.broadcast(hit), "request_index", "left").orderBy("request_index").select(
         "request_index", "id", "gid", "submission_offset"

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ..functions.scalar import round_half_up, sql_round_half_up
 from ..operators.graph import copurchase_edges
-from ..sources.tables import load_table, parquet_column_max
+from ..sources.tables import load_table, local_frame, parquet_column_max
 from .registry import query
 
 # --------------------------------------------------------------------------------------
@@ -1488,7 +1488,7 @@ _BANDS = ((0.0, 20.0, "low"), (20.0, 60.0, "mid"), (60.0, 90.0, "high"), (90.0, 
 )
 def band_join_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    bands = spark.createDataFrame(list(_BANDS), "lo DOUBLE, hi DOUBLE, band STRING")
+    bands = local_frame(spark, _BANDS, "lo DOUBLE, hi DOUBLE, band STRING")
     j = ev.join(
         F.broadcast(bands),
         (F.col("value") >= F.col("lo")) & (F.col("value") < F.col("hi")),

@@ -27,7 +27,7 @@ from ..functions.text import (
     sql_minhash_exprs,
     tokens,
 )
-from ..sources.tables import load_table
+from ..sources.tables import load_table, local_frame
 from .registry import query
 
 
@@ -1275,8 +1275,10 @@ def observed_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_kept / n_scanned if n_scanned > 0 else None,
         )
     ]
-    out = spark.createDataFrame(
-        row, "n_scanned BIGINT, n_kept BIGINT, kept_chars BIGINT, kept_alpha_mean DOUBLE, kept_ratio DOUBLE"
+    out = local_frame(
+        spark,
+        row,
+        "n_scanned BIGINT, n_kept BIGINT, kept_chars BIGINT, kept_alpha_mean DOUBLE, kept_ratio DOUBLE",
     )
     return out.select(
         "n_scanned",

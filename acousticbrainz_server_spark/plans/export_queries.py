@@ -43,6 +43,7 @@ from ..sources.dumps import (
     incremental_window,
     DATA_DUMP_SCHEMA,
 )
+from ..sources.tables import local_frame
 from .metric_queries import AB_FIXTURE_DIR, _P3_CASE
 from .registry import query
 
@@ -258,8 +259,8 @@ def dump_incremental_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     # timestamp literals cross the engine boundary -> pin the session tz like
     # the events read path does (sources/tables.py _prep_events_session)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    data_dump = spark.createDataFrame(
-        [{"id": i, "created": c, "dump_type": t} for i, c, t in _DD_ROWS], DATA_DUMP_SCHEMA
+    data_dump = local_frame(
+        spark, [{"id": i, "created": c, "dump_type": t} for i, c, t in _DD_ROWS], DATA_DUMP_SCHEMA
     )
     start, end = incremental_window(data_dump, _DD_NOW)
     ll = _ll(spark)

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from ..functions.scalar import round_half_up, sql_round_half_up
 from ..operators.graph import copurchase_edges, pagerank
-from ..sources.tables import load_table
+from ..sources.tables import load_table, local_frame
 from .registry import query
 
 _PR_ITERS = 6
@@ -232,7 +232,7 @@ def bfs_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the difference between O(|E|) and O(rounds * |E|) join work).  The
     # min-relaxation oracle yields the identical distance set because BFS
     # distances are final on first discovery.
-    dist = spark.createDataFrame([(_BFS_SOURCE, 0)], "node LONG, dist INT")
+    dist = local_frame(spark, [(_BFS_SOURCE, 0)], "node LONG, dist INT")
     frontier = dist
     for i in range(1, _BFS_ROUNDS + 1):
         candidates = (

@@ -33,7 +33,7 @@ from ..operators.relational import (
     point_lookup,
     topk_per_group,
 )
-from ..sources.tables import load_table
+from ..sources.tables import load_table, local_frame
 from .registry import query
 
 
@@ -147,14 +147,8 @@ def point_lookup_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # prunes row groups BEFORE the broadcast probe (at scale: partition/file
     # pruning; the join alone would scan everything)
     li = li.filter(F.col("l_orderkey").isin(sorted({k for k, _ in _LOOKUP_KEYS})))
-    import pandas as pd
-
-    # pandas-backed literal -> JVM LocalTableScan (no Python-RDD conversion)
-    keys = spark.createDataFrame(
-        pd.DataFrame(_LOOKUP_KEYS, columns=["l_orderkey", "l_linenumber"]).astype(
-            {"l_orderkey": "int64", "l_linenumber": "int32"}
-        )
-    )
+    # Arrow-backed literal -> JVM LocalTableScan (no Python-RDD conversion)
+    keys = local_frame(spark, _LOOKUP_KEYS, "l_orderkey BIGINT, l_linenumber INT")
     return point_lookup(li, keys, ["l_orderkey", "l_linenumber"]).select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice"
     )
@@ -742,15 +736,9 @@ _LOOKUP_REQUEST = [(0, 5), (1, 99999999), (2, 1), (3, 3), (4, 5), (5, 77777777),
     """,
 )
 def ordered_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     orders = load_table(spark, sf_dir, "orders")
-    # pandas-backed literal -> JVM LocalTableScan (no Python-RDD conversion)
-    req = spark.createDataFrame(
-        pd.DataFrame(_LOOKUP_REQUEST, columns=["request_index", "o_orderkey"]).astype(
-            {"request_index": "int32", "o_orderkey": "int64"}
-        )
-    )
+    # Arrow-backed literal -> JVM LocalTableScan (no Python-RDD conversion)
+    req = local_frame(spark, _LOOKUP_REQUEST, "request_index INT, o_orderkey BIGINT")
     hit = orders.join(F.broadcast(req), "o_orderkey", "inner").select("request_index", "o_custkey")
     return (
         req.join(F.broadcast(hit), "request_index", "left")

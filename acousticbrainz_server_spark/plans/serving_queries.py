@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.scalar import round_half_up, sql_round_half_up
+from ..sources.tables import load_table, local_frame
 from .metric_queries import AB_FIXTURE_DIR
 from .registry import query
 
@@ -90,8 +91,8 @@ def _values(rows) -> str:
     """,
 )
 def user_api_key_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    users = spark.createDataFrame(_USERS, "id INT, musicbrainz_id STRING, admin BOOLEAN, gdpr_agreed_ms BIGINT")
-    keys = spark.createDataFrame(_API_KEYS, "value STRING, is_active BOOLEAN, owner INT")
+    users = local_frame(spark, _USERS, "id INT, musicbrainz_id STRING, admin BOOLEAN, gdpr_agreed_ms BIGINT")
+    keys = local_frame(spark, _API_KEYS, "value STRING, is_active BOOLEAN, owner INT")
     return (
         keys.filter(F.col("is_active"))
         .join(F.broadcast(users), keys["owner"] == users["id"])
@@ -172,8 +173,8 @@ def feedback_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def challenge_leaderboard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ch = spark.createDataFrame(_CHALLENGES, "challenge_id STRING, name STRING, concluded BOOLEAN")
-    subs = spark.createDataFrame(_SUBMISSIONS, "job STRING, challenge_id STRING, accuracy_pct DOUBLE")
+    ch = local_frame(spark, _CHALLENGES, "challenge_id STRING, name STRING, concluded BOOLEAN")
+    subs = local_frame(spark, _SUBMISSIONS, "job STRING, challenge_id STRING, accuracy_pct DOUBLE")
     w = Window.partitionBy("challenge_id").orderBy(F.desc("accuracy_pct"))
     return (
         subs.join(F.broadcast(ch.select("challenge_id", F.col("name").alias("challenge_name"), "concluded")), "challenge_id")
@@ -229,9 +230,7 @@ _ERASE_USERS = (3, 7, 11, 19, 42)
     """,
 )
 def deletion_cascade_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import load_table
-
-    subjects = spark.createDataFrame([(u,) for u in _ERASE_USERS], "uid LONG")
+    subjects = local_frame(spark, [(u,) for u in _ERASE_USERS], "uid LONG")
     ev = load_table(spark, sf_dir, "events").select("user_id")
     od = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey")

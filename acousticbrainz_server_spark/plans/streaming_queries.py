@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from ..functions.scalar import round_half_up, sql_round_half_up
 from ..session import touch_scratch_tag
-from ..sources.tables import load_events_stream, load_table
+from ..sources.tables import load_events_stream, load_table, local_frame
 from .registry import query
 
 _SINK = "streaming_daily_counts_sink"
@@ -1588,7 +1588,7 @@ def streaming_observe_metrics_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the handful of progress rows is driver-resident by API design
     # (observedMetrics live in StreamingQueryProgress); rounding happens in
     # Spark so both engines apply the identical half-up formula
-    return spark.createDataFrame(rows, schema).select(
+    return local_frame(spark, rows, schema).select(
         "batch_id",
         "n_rows",
         "min_id",

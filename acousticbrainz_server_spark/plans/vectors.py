@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from ..functions.scalar import round_half_up, sql_round_half_up
 from ..functions.vector import angular_distance, cosine
-from ..sources.tables import load_table
+from ..sources.tables import load_table, local_frame
 from .metric_queries import AB_FIXTURE_DIR
 from .registry import query
 
@@ -897,7 +897,7 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             range(len(centroids)), key=lambda c: (-float(np.floor(cos[qi, c] * 1e4 + 0.5) / 1e4), c)
         )[:2]
         probe_rows.extend((qid, c) for c in order)
-    probe = spark.createDataFrame(probe_rows, "query_id LONG, cell INT")
+    probe = local_frame(spark, probe_rows, "query_id LONG, cell INT")
 
     qtab = _dist_tables(qx, books)  # q x m x k
     qtab_rows = [
@@ -906,7 +906,7 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         for s in range(_PQ_M)
         for c in range(_PQ_K)
     ]
-    qtab_df = spark.createDataFrame(qtab_rows, "query_id LONG, s INT, c INT, d DOUBLE")
+    qtab_df = local_frame(spark, qtab_rows, "query_id LONG, s INT, c INT, d DOUBLE")
 
     cand = (
         cells.select("vec_id", "cell")

@@ -22,7 +22,8 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# unset -> the host's core count (a fixed 32 oversubscribed small hosts)
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
 _SCRATCH_TTL_SEC = 6 * 3600
 _reaped = False
@@ -43,6 +44,16 @@ def touch_scratch_tag(path: str) -> None:
         pass
 
 
+def _stale(path: str, ttl_sec: int) -> bool:
+    """True when ``path`` is a directory last touched more than ``ttl_sec`` ago."""
+    import time
+
+    try:
+        return os.path.isdir(path) and time.time() - os.stat(path).st_mtime > ttl_sec
+    except OSError:
+        return False
+
+
 def reap_scratch(ttl_sec: int = _SCRATCH_TTL_SEC) -> list[str]:
     """Reap orphaned ``abspark_*`` scratch under the system temp dir (r11
     verdict #5: ~35 dead-pid tags had accumulated across rounds).  Two
@@ -57,15 +68,15 @@ def reap_scratch(ttl_sec: int = _SCRATCH_TTL_SEC) -> list[str]:
       tag is rebuilt on next use, never corrupted.
 
     Top-level non-pid dirs themselves (``abspark_bucketed`` etc.) are
-    persistent caches and are left alone.  Returns the removed paths."""
+    persistent caches and are left alone.  Each stale tag is re-stat'ed
+    just before its ``rmtree``: a live owner that touched it after the scan
+    (:func:`touch_scratch_tag`) keeps it.  Returns the removed paths."""
     import re
     import shutil
     import tempfile
-    import time
 
     removed: list[str] = []
     tmp = tempfile.gettempdir()
-    now = time.time()
     try:
         entries = [e for e in os.listdir(tmp) if e.startswith("abspark_")]
     except OSError:
@@ -91,14 +102,11 @@ def reap_scratch(ttl_sec: int = _SCRATCH_TTL_SEC) -> list[str]:
             subs = os.listdir(path)
         except OSError:
             continue
-        for s in subs:
-            sp = os.path.join(path, s)
-            try:
-                if os.path.isdir(sp) and now - os.stat(sp).st_mtime > ttl_sec:
-                    shutil.rmtree(sp, ignore_errors=True)
-                    removed.append(sp)
-            except OSError:
-                pass
+        stale = [sp for sp in (os.path.join(path, s) for s in subs) if _stale(sp, ttl_sec)]
+        for sp in stale:
+            if _stale(sp, ttl_sec):
+                shutil.rmtree(sp, ignore_errors=True)
+                removed.append(sp)
     return removed
 
 

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vector import angular_distance, norm
+from ..sources.tables import local_frame
 
 
 def rp_planes(num_hash_tables: int, dim: int, seed: int) -> list[list[float]]:
@@ -66,7 +67,7 @@ class RPLSHIndex:
     def planes_df(self, spark) -> DataFrame:
         """The plane matrix as a 10-row RELATION (table_idx, plane)."""
         rows = [(j, self.planes[j]) for j in range(len(self.planes))]
-        return spark.createDataFrame(rows, "table_idx INT, plane ARRAY<DOUBLE>")
+        return local_frame(spark, rows, "table_idx INT, plane ARRAY<DOUBLE>")
 
     def bucket_rows(self, nz: DataFrame, id_alias: str, keep_raw: bool) -> DataFrame:
         """Exploded bucket relation: one row per (vector, hash table) with
@@ -102,9 +103,8 @@ class RPLSHIndex:
 
     def save(self, spark, path: str) -> None:
         rows = [(j, self.planes[j], self.bucket_length, self.seed) for j in range(len(self.planes))]
-        spark.createDataFrame(rows, "table_idx INT, plane ARRAY<DOUBLE>, bucket_length DOUBLE, seed INT").write.mode(
-            "overwrite"
-        ).parquet(path)
+        df = local_frame(spark, rows, "table_idx INT, plane ARRAY<DOUBLE>, bucket_length DOUBLE, seed INT")
+        df.write.mode("overwrite").parquet(path)
 
     @classmethod
     def load(cls, spark, path: str) -> "RPLSHIndex":

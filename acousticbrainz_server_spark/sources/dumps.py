@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .tables import local_frame
+
 ROWS_PER_FILE = 500_000  # db/dump.py:36-38
 SAMPLE_DATASET_SIZE = 100_000  # db/dump.py:31
 SCHEMA_VERSION = 4  # db/__init__.py:7
@@ -194,5 +196,5 @@ def record_dump(spark: SparkSession, data_dump: DataFrame, now: datetime, dump_t
     """Append the bookkeeping row (no Delta in this env — emulated with a
     union; the cluster path is a Delta MERGE/append)."""
     next_id = (data_dump.agg(F.coalesce(F.max("id"), F.lit(0)).alias("m")).collect()[0]["m"] or 0) + 1
-    new = spark.createDataFrame([{"id": next_id, "created": now, "dump_type": dump_type}], DATA_DUMP_SCHEMA)
+    new = local_frame(spark, [{"id": next_id, "created": now, "dump_type": dump_type}], DATA_DUMP_SCHEMA)
     return data_dump.unionByName(new)

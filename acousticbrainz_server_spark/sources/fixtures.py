@@ -22,6 +22,7 @@ from datetime import datetime, timedelta
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import schemas
+from .tables import local_frame
 
 KEYS_CIRCLE = ["C", "G", "D", "A", "E", "B", "F#", "C#", "G#", "D#", "A#", "F"]
 TAG_EXTRA_BAD = "my_custom_tag_not_whitelisted"
@@ -209,13 +210,13 @@ def generate_fixture_tables(
                 mem_rows.append({"class": cls_id, "mbid": mbid})
 
     return {
-        "lowlevel": spark.createDataFrame(ll_rows, schemas.LOWLEVEL),
-        "lowlevel_json": spark.createDataFrame(llj_rows, schemas.LOWLEVEL_JSON),
-        "model": spark.createDataFrame(model_rows, schemas.MODEL),
-        "highlevel": spark.createDataFrame(hl_rows, schemas.HIGHLEVEL),
-        "highlevel_meta": spark.createDataFrame(hlmeta_rows, schemas.HIGHLEVEL_META),
-        "highlevel_model": spark.createDataFrame(hlm_rows, schemas.HIGHLEVEL_MODEL),
-        "dataset": spark.createDataFrame(ds_rows, schemas.DATASET),
-        "dataset_class": spark.createDataFrame(cls_rows, schemas.DATASET_CLASS),
-        "dataset_class_member": spark.createDataFrame(mem_rows, schemas.DATASET_CLASS_MEMBER),
+        "lowlevel": local_frame(spark, ll_rows, schemas.LOWLEVEL),
+        "lowlevel_json": local_frame(spark, llj_rows, schemas.LOWLEVEL_JSON),
+        "model": local_frame(spark, model_rows, schemas.MODEL),
+        "highlevel": local_frame(spark, hl_rows, schemas.HIGHLEVEL),
+        "highlevel_meta": local_frame(spark, hlmeta_rows, schemas.HIGHLEVEL_META),
+        "highlevel_model": local_frame(spark, hlm_rows, schemas.HIGHLEVEL_MODEL),
+        "dataset": local_frame(spark, ds_rows, schemas.DATASET),
+        "dataset_class": local_frame(spark, cls_rows, schemas.DATASET_CLASS),
+        "dataset_class_member": local_frame(spark, mem_rows, schemas.DATASET_CLASS_MEMBER),
     }

@@ -5,14 +5,20 @@ The driver materializes TPC-H-ish tables plus ``events`` / ``documents`` /
 plain columnar parquet scan — Catalyst handles predicate pushdown and column
 pruning, so callers should select/filter on the returned DataFrame and trust
 the optimizer (verified via .explain in tests/test_plans.py).
+
+Rows held in Python (request keys, literal dimension tables, progress
+records) enter plans through :func:`local_frame`, never a bare
+``createDataFrame``.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TESTDATA_TABLES = (
     "region",
@@ -155,6 +161,35 @@ def load_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(sf_dir)
     )
     return normalize_events_ts(raw, nanos)
+
+
+def local_frame(spark: SparkSession, rows: Iterable, schema: str | StructType) -> DataFrame:
+    """Rows held in Python as a JVM ``LocalRelation`` (``LocalTableScan``).
+
+    ``spark.createDataFrame(<python list>, schema)`` ships the rows as a
+    pickled ``PythonRDD``: every action on the frame starts one Python-worker
+    task per ``defaultParallelism`` partition just to unpickle a handful of
+    literal rows (on a 4-core host, ~4 s of worker CPU per pass of the
+    16-query serving workload, against ~0.7 s without it).  A
+    ``pyarrow.Table`` input instead becomes a ``LocalRelation`` on the JVM
+    side, which runs no Python task at all.
+
+    ``schema`` is a DDL string or a ``StructType``; ``rows`` are tuples,
+    ``Row``s or dicts, possibly empty.  Each row goes through the schema's
+    own ``toInternal`` first, so dict/Row field matching, nested structs and
+    naive ``datetime`` handling (local-time epoch, as in the list path) are
+    exactly PySpark's; the Arrow columns then carry the internal values
+    (timestamps as UTC epoch micros, so no second session-zone shift).
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    internal = [struct.toInternal(r) for r in rows]
+    cols = list(zip(*internal)) if internal else [()] * len(arrow)
+    table = pa.Table.from_arrays([pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow)
+    return spark.createDataFrame(table, struct)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

@@ -59,6 +59,7 @@ def main() -> None:
     fixed_runs = max(1, int(n_runs_env)) if n_runs_env else None
     times: dict[str, float] = {}
     times_cold: dict[str, float] = {}
+    errors: dict[str, str] = {}
     for name, spec in sorted(QUERIES.items()):
         cold = None
         best = None
@@ -84,6 +85,7 @@ def main() -> None:
                     best = dt if best is None else min(best, dt)
             except Exception as e:
                 print(f"bench error {name}: {e}", file=sys.stderr)
+                errors[name] = f"{type(e).__name__}: {str(e).strip()[:200]}"
                 # keep successful earlier timings; -1.0 only if NO run succeeded
                 if cold is None:
                     cold = -1.0
@@ -124,6 +126,11 @@ def main() -> None:
                 "t_end": round(time.time(), 1),
                 "loadavg_start": [round(x, 2) for x in loadavg_start],
                 "loadavg_end": [round(x, 2) for x in os.getloadavg()],
+                # an errored query is left out of value/value_cold (its
+                # timing reads -1.0 when no run succeeded); these keys keep
+                # it from silently shrinking the total
+                "n_errors": len(errors),
+                "errors": errors,
                 "queries_cold": times_cold,
                 "queries": times,
             }

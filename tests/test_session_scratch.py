@@ -42,6 +42,39 @@ def test_reap_removes_stale_tag_but_keeps_touched(tmp_path):
     shutil.rmtree(base, ignore_errors=True)
 
 
+def test_reap_skips_tag_touched_between_scan_and_delete(monkeypatch):
+    """A live owner touching its tag AFTER the reaper's scan found it stale
+    (but before the delete) keeps it: the reaper re-stats right before
+    ``rmtree``."""
+    import shutil
+
+    from acousticbrainz_server_spark import session
+
+    base = os.path.join(tempfile.gettempdir(), "abspark_ttlrace")
+    tag = os.path.join(base, "racetag0")
+    os.makedirs(tag, exist_ok=True)
+    _age(tag, 10 * 3600)
+    real_stale = session._stale
+    checks = []
+
+    def scan_then_touch(path, ttl_sec):
+        stale = real_stale(path, ttl_sec)
+        if path == tag:
+            checks.append(stale)
+            if len(checks) == 1:
+                touch_scratch_tag(tag)  # the owner's reuse path fires here
+        return stale
+
+    monkeypatch.setattr(session, "_stale", scan_then_touch)
+    try:
+        removed = reap_scratch(ttl_sec=6 * 3600)
+        assert checks == [True, False]  # stale at scan, fresh at delete time
+        assert tag not in removed
+        assert os.path.isdir(tag)
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
 def test_ttb_reuse_refreshes_ttl(spark):
     """Real reuse path: ``_ttb_build_src`` hit twice — the second call takes
     the ``_DONE`` short-circuit and must still refresh the tag's mtime so a
