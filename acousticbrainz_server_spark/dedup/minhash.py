@@ -29,7 +29,6 @@ from ..functions.text import (
     char_shingle_stream,
     minhash_signature_aggs,
     minhash_signature_longs,
-    use_portable_hash,
 )
 
 
@@ -39,32 +38,25 @@ def minhash_signatures(
     text_col: str = "text",
     n_hashes: int = 8,
     shingle_k: int = 5,
-    portable: bool | None = None,
 ) -> DataFrame:
     """One row per doc: id + mh0..mh{n-1} min-hash signature columns
-    (md5-slice family by default; xxhash64 under the production flag —
-    functions/text.use_portable_hash)."""
+    (md5-slice family, functions/text.minhash_signature_aggs)."""
     sh = char_shingle_stream(docs, id_col, text_col, shingle_k)
-    return sh.groupBy("doc").agg(*minhash_signature_aggs("s", n_hashes, portable)).select(
-        "doc", *minhash_signature_longs(n_hashes, portable)
+    return sh.groupBy("doc").agg(*minhash_signature_aggs("s", n_hashes)).select(
+        "doc", *minhash_signature_longs(n_hashes)
     )
 
 
-def _banded_signatures(
-    signatures: DataFrame, n_hashes: int, n_bands: int, portable: bool | None = None
-) -> DataFrame:
+def _banded_signatures(signatures: DataFrame, n_hashes: int, n_bands: int) -> DataFrame:
     """(doc, sig array, band_idx, band_hash) — one row per doc per band."""
     rows_per_band = n_hashes // n_bands
-    if portable is None:
-        portable = use_portable_hash()
     # one pass: band array -> explode (vs n_bands unioned scans of the
     # signature relation)
     band_structs = []
     for b in range(n_bands):
         cols = [f"mh{b * rows_per_band + r}" for r in range(rows_per_band)]
-        # band bucket key: md5-of-concat under the portable family (oracle
-        # replicates it in SQL); one multi-column xxhash64 in production
-        bh = F.md5(F.concat_ws("|", *cols)) if portable else F.xxhash64(*cols).cast("string")
+        # band bucket key: md5-of-concat (the oracle replicates it in SQL)
+        bh = F.md5(F.concat_ws("|", *cols))
         band_structs.append(F.struct(F.lit(b).alias("band_idx"), bh.alias("band_hash")))
     return signatures.select(
         "doc",
@@ -126,7 +118,6 @@ def minhash_neardup_pairs(
     n_bands: int = 4,
     shingle_k: int = 5,
     max_bucket_size: int = 1000,
-    portable: bool | None = None,
 ) -> DataFrame:
     """Near-dup candidates with their estimated (signature-agreement) Jaccard.
 
@@ -135,10 +126,10 @@ def minhash_neardup_pairs(
     re-join, no cache.  The interpreted zip_with/aggregate agreement count
     only runs on the (small) candidate-pair stream, never on the corpus.
     """
-    sigs = minhash_signatures(docs, id_col, text_col, n_hashes, shingle_k, portable)
+    sigs = minhash_signatures(docs, id_col, text_col, n_hashes, shingle_k)
     # banded feeds the bucket-size cap and both self-join sides; see
     # lsh_candidate_pairs for the localCheckpoint-over-cache rationale
-    banded = _banded_signatures(sigs, n_hashes, n_bands, portable).localCheckpoint(eager=True)
+    banded = _banded_signatures(sigs, n_hashes, n_bands).localCheckpoint(eager=True)
     pairs = _bucket_pairs(banded, max_bucket_size)
     agree = F.aggregate(
         F.zip_with("sig_a", "sig_b", lambda a, b: F.when(a == b, 1).otherwise(0)),

@@ -15,33 +15,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import repartition_if_narrow, tokens, use_portable_hash
+from ..functions.text import repartition_if_narrow, tokens
 
 N_BITS = 32
 
 
-def token_hash32(col: F.Column, portable: bool | None = None) -> F.Column:
-    """32 uniform hash bits per token.  Portable family: first 8 md5 hex
-    chars as a 32-bit unsigned int (SQL twin: CAST('0x'||substr(md5(s),1,8)
-    AS BIGINT)).  Production family (SPARK_GRAFT_FAST_HASH=1): the low 32
-    bits of xxhash64 — one codegen hash, no digest/hex step."""
-    if portable is None:
-        portable = use_portable_hash()
-    if not portable:
-        return F.xxhash64(col).bitwiseAND(F.lit((1 << 32) - 1))
+def token_hash32(col: F.Column) -> F.Column:
+    """32 uniform hash bits per token: the first 8 md5 hex chars as a 32-bit
+    unsigned int (SQL twin: CAST('0x'||substr(md5(s),1,8) AS BIGINT))."""
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
-def simhash(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", portable: bool | None = None
-) -> DataFrame:
+def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """One row per doc: ``simhash`` 32-bit fingerprint (as long)."""
     # parallelize the token explode when the source arrives under-partitioned
     # (single-file single-row-group parquet at bench scale); at real scale
     # the scan has many files and the full-text shuffle is skipped
     docs = repartition_if_narrow(docs)
     tok = docs.select(F.col(id_col).alias("doc"), F.explode(tokens(F.col(text_col))).alias("t"))
-    h = tok.select("doc", token_hash32(F.col("t"), portable).alias("h"))
+    h = tok.select("doc", token_hash32(F.col("t")).alias("h"))
     # packed-lane bit counting: 8 sum buffers of 4x16-bit lanes instead of 32
     # scalar sums — the aggregate tree shrinks 4x, which is mostly a
     # DRIVER-side win (fresh-plan Catalyst analysis + codegen: cold 4.3s ->
@@ -95,7 +87,6 @@ def simhash_neardup_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     dedupe: bool = True,
-    portable: bool | None = None,
 ) -> DataFrame:
     """Near-dup pairs by banded simhash join (4 bytes; hamming<=3 ⇒ ≥1 equal byte).
 
@@ -113,7 +104,7 @@ def simhash_neardup_pairs(
     bytes appears k times) — e.g. connected-components clustering, whose
     min-aggregate is idempotent.
     """
-    sig = simhash(docs, id_col, text_col, portable)
+    sig = simhash(docs, id_col, text_col)
     banded = sig.select(
         "doc",
         "simhash",

@@ -16,25 +16,8 @@ candidate-pair join touches only colliding docs, never the full cross product.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def use_portable_hash() -> bool:
-    """Hash-family switch for the fingerprint kernels (MinHash, SimHash).
-
-    Default (portable): md5-derived hashes — deterministic AND reproducible
-    in the ANSI-SQL oracle, the correctness-gate stance.  Production runs
-    don't need a portable hash: set SPARK_GRAFT_FAST_HASH=1 to switch the
-    same pipelines to xxhash64 (one JVM-codegen'd 64-bit hash vs a 128-bit
-    cryptographic digest + hex slicing — the md5 expression cost was the only
-    compute-bound >2x-of-baseline left in round 4).  Both families are
-    uniform enough for min-wise/sign-bit sketching; results differ in VALUE
-    but not in contract (identical docs collide in every band either way).
-    """
-    return os.environ.get("SPARK_GRAFT_FAST_HASH", "0") != "1"
 
 # Marker stopwords per language for the n-gram/keyword language-ID heuristic.
 LANG_MARKERS: dict[str, str] = {
@@ -213,7 +196,7 @@ def word_bigrams(text: Column) -> Column:
     )
 
 
-def minhash_signature_aggs(shingle_col: str, n_hashes: int = 4, portable: bool | None = None) -> list[Column]:
+def minhash_signature_aggs(shingle_col: str, n_hashes: int = 4) -> list[Column]:
     """MinHash min-aggregates over HEX SLICES: one md5 per shingle per 4 hash
     functions — each 32-bit hash is an 8-hex-char slice of md5(seed || s).
     A valid min-wise family (md5 slices are independent uniform bits),
@@ -224,32 +207,17 @@ def minhash_signature_aggs(shingle_col: str, n_hashes: int = 4, portable: bool |
     lexicographically in numeric order, so min(hex) == hex(min).  Converting
     to a long per shingle would run `conv` rows_x_hashes times; converting
     after the min (``minhash_signature_longs``) runs it groups_x_hashes times.
-
-    ``portable=False`` (or SPARK_GRAFT_FAST_HASH=1) swaps md5 for seeded
-    xxhash64 — the production family (see ``use_portable_hash``): one codegen
-    hash per (shingle, hash-fn), min over longs directly, no hex step.
     """
-    if portable is None:
-        portable = use_portable_hash()
     out = []
     for i in range(n_hashes):
-        if not portable:
-            out.append(F.min(F.xxhash64(F.lit(i), F.col(shingle_col))).alias(f"_hx{i}"))
-            continue
         seed, slot = divmod(i, 4)
         digest = F.md5(F.col(shingle_col)) if seed == 0 else F.md5(F.concat(F.lit(str(seed)), F.col(shingle_col)))
         out.append(F.min(F.substring(digest, 1 + 8 * slot, 8)).alias(f"_hx{i}"))
     return out
 
 
-def minhash_signature_longs(n_hashes: int = 4, portable: bool | None = None) -> list[Column]:
-    """Post-aggregation projection of the mins to long mh0..mh{n-1} (for the
-    portable family this is the hex->long conv; the fast family's mins are
-    longs already)."""
-    if portable is None:
-        portable = use_portable_hash()
-    if not portable:
-        return [F.col(f"_hx{i}").alias(f"mh{i}") for i in range(n_hashes)]
+def minhash_signature_longs(n_hashes: int = 4) -> list[Column]:
+    """Post-aggregation projection of the hex mins to long mh0..mh{n-1}."""
     return [F.conv(F.col(f"_hx{i}"), 16, 10).cast("long").alias(f"mh{i}") for i in range(n_hashes)]
 
 

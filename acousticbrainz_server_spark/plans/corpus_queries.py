@@ -239,8 +239,8 @@ def cross_snapshot_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = char_shingle_stream(d, "doc_id", "text", 5)
     sig = (
         sh.groupBy("doc")
-        .agg(*minhash_signature_aggs("s", _XS_HASHES, portable=True))
-        .select("doc", *minhash_signature_longs(_XS_HASHES, portable=True))
+        .agg(*minhash_signature_aggs("s", _XS_HASHES))
+        .select("doc", *minhash_signature_longs(_XS_HASHES))
     )
     rows_per_band = _XS_HASHES // _XS_BANDS
     band_structs = []
@@ -430,8 +430,8 @@ def corpus_build_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sig = (
         sh.groupBy("doc")
-        .agg(*minhash_signature_aggs("s", _XS_HASHES, portable=True))
-        .select("doc", *minhash_signature_longs(_XS_HASHES, portable=True))
+        .agg(*minhash_signature_aggs("s", _XS_HASHES))
+        .select("doc", *minhash_signature_longs(_XS_HASHES))
     )
     rows_per_band = _XS_HASHES // _XS_BANDS
     band_structs = []

@@ -130,7 +130,7 @@ def _simhash_oracle(where: str = "") -> str:
 )
 def simhash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    return simhash(d, portable=True).select(F.col("doc").alias("doc_id"), "simhash")
+    return simhash(d).select(F.col("doc").alias("doc_id"), "simhash")
 
 
 # --------------------------------------------------------------------------------------
@@ -158,7 +158,7 @@ def simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     # int64 on both engines: DuckDB bit_count yields TINYINT, which is not a
     # type Spark produces — the external gate hashes dtype-sensitively.
-    return simhash_neardup_pairs(d, max_hamming=3, portable=True).withColumn("hamming", F.col("hamming").cast("long"))
+    return simhash_neardup_pairs(d, max_hamming=3).withColumn("hamming", F.col("hamming").cast("long"))
 
 
 # --------------------------------------------------------------------------------------
@@ -242,7 +242,7 @@ def neardup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whole post-exchange join+filter+dedup per branch (plan pair:
     # plans/r13/neardup_pairs_sym_{before,after}.txt, 24 -> 14 plan nodes;
     # interleaved A/B min 7.56 -> 7.06 s, new shape won 4/5 trials)
-    pairs = simhash_neardup_pairs(d, max_hamming=3, portable=True, dedupe=False)
+    pairs = simhash_neardup_pairs(d, max_hamming=3, dedupe=False)
     return neardup_clusters(d, pairs, id_col="doc_id", dedupe_edges=True)
 
 
@@ -300,7 +300,7 @@ def _minhash_lsh_oracle(n_hashes: int = 8, n_bands: int = 4, max_bucket: int = 1
 )
 def minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    pairs = minhash_neardup_pairs(d, n_hashes=8, n_bands=4, portable=True)
+    pairs = minhash_neardup_pairs(d, n_hashes=8, n_bands=4)
     return pairs.filter(F.col("est_jaccard") >= 0.5).select(
         "doc_a", "doc_b", round_half_up(F.col("est_jaccard"), 4).alias("est_jaccard")
     )
@@ -590,7 +590,7 @@ def minhash_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b")
     )
     cand = (
-        minhash_neardup_pairs(d, n_hashes=8, n_bands=4, portable=True)
+        minhash_neardup_pairs(d, n_hashes=8, n_bands=4)
         .filter(F.col("est_jaccard") >= 0.5)
         .select("doc_a", "doc_b")
     )
@@ -708,7 +708,7 @@ def simhash_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_a", "doc_b")
     )
-    pred = simhash_neardup_pairs(d, max_hamming=_SH_EVAL_H, portable=True).select(
+    pred = simhash_neardup_pairs(d, max_hamming=_SH_EVAL_H).select(
         "doc_a", "doc_b"
     )
     n_true = truth.agg(F.count(F.lit(1)).alias("n_true"))

@@ -256,9 +256,8 @@ _DD_NOW = datetime(2024, 3, 20)
     """,
 )
 def dump_incremental_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # timestamp literals cross the engine boundary -> pin the session tz like
-    # the events read path does (sources/tables.py _prep_events_session)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    # timestamp literals cross the engine boundary: session.QUERY_CONF pins
+    # the session tz to UTC, as for the events read path
     data_dump = local_frame(
         spark, [{"id": i, "created": c, "dump_type": t} for i, c, t in _DD_ROWS], DATA_DUMP_SCHEMA
     )

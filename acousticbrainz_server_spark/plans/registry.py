@@ -10,14 +10,21 @@ two (row count + schema + order-insensitive value hash), so:
 - floating-point aggregates are rounded in BOTH (fp addition order differs
   between engines; rounding makes the hash stable);
 - output column sets are flat (no maps) unless serialized to JSON strings.
+
+Each registered callable runs its query on a child session of the caller's
+(``session.query_scope``) with the query's declared ``conf``; no query sets
+conf on the session it is handed.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..session import query_scope
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -29,18 +36,33 @@ class QuerySpec:
     oracle: str | None  # ANSI SQL for the DuckDB oracle; None = rows-only check
     family: str  # SURVEY.md §2 operator id(s), e.g. "J4", "A6,F13"
     doc: str = ""
+    conf: dict[str, str] | None = None  # SQL conf on top of session.QUERY_CONF
 
 
 QUERIES: dict[str, QuerySpec] = {}
 
 
-def query(name: str, *, oracle: str | None, family: str, doc: str = ""):
-    """Decorator: register a Spark query callable under ``name``."""
+def query(
+    name: str, *, oracle: str | None, family: str, doc: str = "", conf: dict[str, str] | None = None
+):
+    """Decorator: register a Spark query callable under ``name``.
+
+    The registered ``spark_fn`` runs ``fn`` on a child session carrying
+    ``conf``; the decorator returns ``fn`` itself (reachable from the
+    registry as ``spark_fn.__wrapped__``)."""
 
     def wrap(fn: SparkQuery) -> SparkQuery:
         if name in QUERIES:
             raise ValueError(f"duplicate query name {name!r}")
-        QUERIES[name] = QuerySpec(name=name, spark_fn=fn, oracle=oracle, family=family, doc=doc or (fn.__doc__ or ""))
+
+        @functools.wraps(fn)
+        def spark_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+            with query_scope(spark, conf) as child:
+                return fn(child, sf_dir)
+
+        QUERIES[name] = QuerySpec(
+            name=name, spark_fn=spark_fn, oracle=oracle, family=family, doc=doc or (fn.__doc__ or ""), conf=conf
+        )
         return fn
 
     return wrap
@@ -87,10 +109,12 @@ def _load_all() -> None:
 #       cross_snapshot_dedup, corpus_build_pipeline);
 #     - neardup_cluster_assign (connected_components explode
 #       symmetrization + fused edge dedup);
-#     - the scratch-TTL touch_scratch_tag reuse paths + the derived
-#       _STREAM_STATE_PARTITIONS formula (same value at the driver's core
-#       counts, but the code path changed): the ttb/wma/sink/upsert/
-#       incremental-corpus streaming builders and the bucketed sketch
+#     - the scratch-TTL touch_scratch_tag reuse paths + the then-derived
+#       stream state-partition count, max(4, cpus//8) (same value at the
+#       driver's core counts, but the code path changed; it is now the
+#       fixed STREAM_CONF that streaming_queries.py declares per query):
+#       the ttb/wma/sink/upsert/incremental-corpus streaming builders and
+#       the bucketed sketch
 #       scratch (streaming_state_timetravel, streaming_state_changefeed,
 #       streaming_observe_metrics, streaming_python_sink_rollup,
 #       streaming_join_state_changefeed, streaming_upsert_foreachbatch,

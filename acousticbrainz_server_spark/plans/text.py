@@ -121,8 +121,8 @@ def minhash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = char_shingle_stream(d, "doc_id", "text", 5)
     return (
         sh.groupBy(F.col("doc").alias("doc_id"))
-        .agg(*minhash_signature_aggs("s", 4, portable=True))
-        .select("doc_id", *minhash_signature_longs(4, portable=True))
+        .agg(*minhash_signature_aggs("s", 4))
+        .select("doc_id", *minhash_signature_longs(4))
     )
 
 

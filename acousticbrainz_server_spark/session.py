@@ -1,4 +1,4 @@
-"""SparkSession factory.
+"""SparkSession factory and the per-query child session.
 
 Local-mode settings are tuned for the test/bench harness (local[N], one JVM);
 the same builder config is what we would ship to a real cluster, minus master
@@ -10,20 +10,42 @@ and driver-memory (which come from spark-submit there).  Key choices:
 - shuffle.partitions ~ cores for local mode; on a 1000-executor cluster this
   would be set ~2-3x total cores (or left to AQE's coalescing with a high
   initial value).
-- session timezone pinned UTC: the reference stores TIMESTAMPTZ (UTC) and the
-  DuckDB oracle is UTC-naive — pinning makes results comparable.
+- ``QUERY_CONF`` (session timezone UTC, ``nanosAsLong``): the reference
+  stores TIMESTAMPTZ (UTC) and the DuckDB oracle is UTC-naive — pinning
+  makes results comparable.
 - Arrow enabled: every Pandas-UDF boundary (external-binary map stage, custom
   dedup kernels) moves data in Arrow batches, not pickled rows.
+
+Every registered query runs on its own child session
+(:func:`query_session`, applied by ``plans/registry.py``), the way each
+request of the reference gets its own transaction and session settings: a
+query's conf, temp views, registered UDTFs/data sources and streaming sinks
+stay on the child, so no query changes the caller's session or a concurrent
+query's.  Children share the SparkContext (so everything set on this
+builder) and the cache.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
 
 # unset -> the host's core count (a fixed 32 oversubscribed small hosts)
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+# SQL conf every query runs under, whatever the caller's session says:
+# - session timezone UTC: the micros TIMESTAMP_NTZ -> TIMESTAMP cast of
+#   events.ts and every tz-sensitive rendering (to_date, window starts,
+#   date_trunc) must agree with the UTC-naive DuckDB oracle;
+# - nanosAsLong: TIMESTAMP(NANOS) parquet (some events.parquet generations)
+#   reads as BIGINT instead of crashing the vectorized reader
+#   (sources/tables.normalize_events_ts truncates it); no effect on micros.
+QUERY_CONF = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
 
 _SCRATCH_TTL_SEC = 6 * 3600
 _reaped = False
@@ -136,7 +158,6 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
@@ -161,8 +182,70 @@ def get_spark(
         # are ever known to be unreliable for a workload.
         .config("spark.sql.join.preferSortMergeJoin", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**QUERY_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def query_session(spark: SparkSession, conf: dict[str, str] | None = None) -> SparkSession:
+    """A child of ``spark`` with :data:`QUERY_CONF` plus ``conf`` set on it.
+
+    ``newSession()`` shares the SparkContext and the cache but has its own
+    SQLConf, temp views, UDTF and data-source registry and streaming query
+    manager.  It starts from the SparkContext's conf, not from ``spark``'s
+    runtime conf: a ``conf.set`` on the caller's session does not reach it."""
+    child = spark.newSession()
+    for k, v in {**QUERY_CONF, **(conf or {})}.items():
+        child.conf.set(k, v)
+    return child
+
+
+@contextlib.contextmanager
+def query_scope(spark: SparkSession, conf: dict[str, str] | None = None):
+    """Run a block on ``query_session(spark, conf)``, the active session of
+    this thread until the block ends.
+
+    Active, because some Spark paths resolve names on the thread's active
+    session rather than the DataFrame's: a stream written to a Python data
+    source registered on the child is one.  On exit, the streaming listener
+    buses registered meanwhile are detached (:func:`_detach_stream_buses`)."""
+    sessions = spark.sparkContext._jvm.SparkSession
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    before = bus.listeners()
+    caller = sessions.getActiveSession()
+    child = query_session(spark, conf)
+    sessions.setActiveSession(child._jsparkSession)
+    try:
+        yield child
+    finally:
+        if caller.isDefined():
+            sessions.setActiveSession(caller.get())
+        else:
+            sessions.clearActiveSession()
+        _detach_stream_buses(spark, bus, before)
+
+
+def _detach_stream_buses(spark: SparkSession, bus, before) -> None:
+    """Remove from ``bus`` (the context's ``LiveListenerBus``) each
+    ``StreamingQueryListenerBus`` not in ``before`` that has no listener.
+
+    A session's stream manager registers such a bus and nothing removes it:
+    both the child that starts a stream and the per-stream clone of it that
+    a stateful stream builds, so each would stay reachable (memory-sink
+    tables included) for the life of the context.  A bus that has a
+    ``StreamingQueryListener`` is kept."""
+    after = bus.listeners()
+    if after.size() == before.size():  # the common case: nothing to diff
+        return
+    new = spark.sparkContext._jvm.java.util.ArrayList(after)
+    new.removeAll(before)
+    # indexed, not `for ... in`: py4j's list iterator costs ~15 ms
+    for i in range(new.size()):
+        listener = new.get(i)
+        if (
+            listener.getClass().getSimpleName() == "StreamingQueryListenerBus"
+            and listener.listeners().isEmpty()
+        ):
+            bus.removeListener(listener)

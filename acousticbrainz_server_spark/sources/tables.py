@@ -55,32 +55,13 @@ def normalize_events_ts(df: DataFrame, nanos: bool) -> DataFrame:
 
     nanos=False: ts arrived as TIMESTAMP_NTZ (micros parquet) — cast to
     TimestampType so every downstream plan (windows, streaming, comparisons)
-    sees the same type in both generations.  Callers must pin the session
-    timezone to UTC first (see ``_prep_events_session``) so the NTZ->TZ cast
-    is value-identical to DuckDB's UTC-naive reading.
+    sees the same type in both generations.  Both paths rely on
+    ``session.QUERY_CONF`` (nanosAsLong; timezone UTC, so the NTZ->TZ cast
+    is value-identical to DuckDB's UTC-naive reading).
     """
     if nanos:
         return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df.withColumn("ts", F.col("ts").cast("timestamp"))
-
-
-def _prep_events_session(spark: SparkSession, path: str) -> bool:
-    """Probe the events footer and pin the runtime confs both read paths need.
-
-    Returns the nanos flag.  Both confs are runtime-settable, so this works
-    on caller-provided sessions (e.g. the driver's) as well as ours:
-    - nanosAsLong so TIMESTAMP(NANOS) parquet reads as BIGINT instead of
-      crashing the vectorized reader;
-    - session timezone UTC in BOTH generations: the micros TIMESTAMP_NTZ ->
-      TIMESTAMP cast and every tz-sensitive rendering downstream (to_date,
-      window starts, date_trunc) must agree with the UTC-naive DuckDB oracle
-      even under a non-UTC caller session.
-    """
-    nanos = events_ts_is_nanos(path)
-    if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return nanos
 
 
 def parquet_column_max(sf_dir: str, name: str, column: str):
@@ -123,15 +104,9 @@ def parquet_column_max(sf_dir: str, name: str, column: str):
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver testdata table.
 
-    SIDE EFFECT, by design (round-4 advice: surface it): loading ``events``
-    pins ``spark.sql.session.timeZone=UTC`` (and, for TIMESTAMP(NANOS)
-    generations, ``legacy.parquet.nanosAsLong``) on the CALLER's session for
-    the rest of that session — every tz-sensitive rendering downstream
-    (to_date, window starts, date_trunc) must agree with the UTC-naive DuckDB
-    oracle even when the caller's session default differs.  A per-column
-    to_utc conversion cannot express this: group windows and date_trunc read
-    the session zone, not the column.  All other tables are plain parquet
-    reads with no conf changes.
+    ``events`` needs the session conf of ``session.QUERY_CONF`` (timezone
+    UTC, nanosAsLong), which every registered query's child session and
+    ``get_spark``'s builder carry; this function sets no conf.
     """
     if name not in TESTDATA_TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TESTDATA_TABLES}")
@@ -140,8 +115,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # generations (Spark's vectorized reader rejects it) and TIMESTAMP(US)
         # in others — probe the footer and adapt rather than assume either.
         path = os.path.join(sf_dir, "events.parquet")
-        nanos = _prep_events_session(spark, path)
-        return normalize_events_ts(spark.read.parquet(path), nanos)
+        return normalize_events_ts(spark.read.parquet(path), events_ts_is_nanos(path))
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
@@ -151,7 +125,6 @@ def load_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     can never split the batch and streaming paths again (the round-3 lesson:
     three streaming plans hard-coded the nanos arithmetic and broke)."""
     path = os.path.join(sf_dir, "events.parquet")
-    nanos = _prep_events_session(spark, path)
     schema = spark.read.parquet(path).schema
     # the streaming file source wants a directory: stream the sf dir with a
     # glob pinning it to the events table
@@ -160,7 +133,7 @@ def load_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    return normalize_events_ts(raw, nanos)
+    return normalize_events_ts(raw, events_ts_is_nanos(path))
 
 
 def local_frame(spark: SparkSession, rows: Iterable, schema: str | StructType) -> DataFrame:

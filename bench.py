@@ -96,13 +96,6 @@ def main() -> None:
         # single-run mode (or an error after run 1): warm falls back to cold
         times[name] = round(best if best is not None else cold, 3)
         spark.catalog.clearCache()
-        # drop streaming memory-sink temp views: their buffered results would
-        # otherwise live for the rest of the run and bill GC pressure to
-        # whatever query happens to follow alphabetically (persistent tables
-        # like the bucketed-layout ones are NOT temp and are kept)
-        for t in spark.catalog.listTables():
-            if t.isTemporary:
-                spark.catalog.dropTempView(t.name)
     total = round(sum(t for t in times.values() if t >= 0), 3)
     total_cold = round(sum(t for t in times_cold.values() if t >= 0), 3)
     # key order matters: the driver's BENCH_rN artifact stores only the TAIL

@@ -731,7 +731,7 @@ def test_dedup_stack_scales_10x(spark):
     )
     assert big.count() == 10 * n0
     t0 = time.time()
-    pairs = minhash_neardup_pairs(big, n_hashes=8, n_bands=4, portable=False)
+    pairs = minhash_neardup_pairs(big, n_hashes=8, n_bands=4)
     plan = pairs._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     n_pairs = pairs.count()

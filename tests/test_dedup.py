@@ -273,43 +273,6 @@ def test_dense_matmul_tiling_route_equivalence(spark):
         assert tiled[k] == untiled[k] == exact[k]
 
 
-def test_fast_hash_family_contract(spark, monkeypatch):
-    """SPARK_GRAFT_FAST_HASH=1 swaps md5 for xxhash64 in the fingerprint
-    kernels: values differ, the dedup CONTRACT does not — identical docs get
-    identical fingerprints/signatures and collide in every band, and the
-    physical plans carry xxhash64 instead of md5."""
-    from acousticbrainz_server_spark.dedup.minhash import minhash_neardup_pairs, minhash_signatures
-    from acousticbrainz_server_spark.functions.text import use_portable_hash
-
-    d = _docs(spark)
-    assert use_portable_hash()
-    monkeypatch.setenv("SPARK_GRAFT_FAST_HASH", "1")
-    assert not use_portable_hash()
-
-    fp = simhash(d)
-    plan = fp._jdf.queryExecution().executedPlan().toString()
-    assert "xxhash64" in plan and "md5" not in plan
-    sh = {r["doc"]: r["simhash"] for r in fp.collect()}
-    assert sh[1] == sh[2] != sh[4]
-    assert 0 <= sh[1] < (1 << 32)
-    pairs = {(r["doc_a"], r["doc_b"]): r["hamming"] for r in simhash_neardup_pairs(d, max_hamming=6).collect()}
-    assert pairs[(1, 2)] == 0
-
-    sigs_df = minhash_signatures(d, n_hashes=4)
-    plan = sigs_df._jdf.queryExecution().executedPlan().toString()
-    assert "xxhash64" in plan and "md5" not in plan
-    sigs = {r["doc"]: tuple(r)[1:] for r in sigs_df.collect()}
-    assert sigs[1] == sigs[2] != sigs[4]
-    est = {(r["doc_a"], r["doc_b"]): r["est_jaccard"] for r in minhash_neardup_pairs(d, n_hashes=8, n_bands=4).collect()}
-    assert est[(1, 2)] == 1.0
-
-    # the portable family is unaffected by the flag when pinned explicitly
-    pinned = {r["doc"]: r["simhash"] for r in simhash(d, portable=True).collect()}
-    monkeypatch.delenv("SPARK_GRAFT_FAST_HASH")
-    default = {r["doc"]: r["simhash"] for r in simhash(d).collect()}
-    assert pinned == default
-
-
 def test_semdedup_gemm_matches_brute_force_reference(spark, tmp_path):
     # the applyInPandas per-cluster gemm must reproduce a direct python
     # reference (assign -> within-cell pairwise rounded cosine -> max over

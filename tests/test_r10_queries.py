@@ -15,6 +15,8 @@ from __future__ import annotations
 import pandas as pd
 
 from acousticbrainz_server_spark.plans.registry import QUERIES, _load_all
+from acousticbrainz_server_spark.plans.relational import skew_join_adaptive
+from acousticbrainz_server_spark.session import query_session
 from tests.conftest import SF_CORRECT
 
 _load_all()
@@ -54,41 +56,18 @@ def _multifile_sf(spark, tmp_path) -> str:
     return sf
 
 
-def _with_confs(spark, confs: dict[str, str]):
-    saved = {}
-    for k, v in confs.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    return saved
-
-
-def _restore_confs(spark, saved: dict[str, str | None]) -> None:
-    for k, v in saved.items():
-        if v is None:
-            spark.conf.unset(k)
-        else:
-            spark.conf.set(k, v)
-
-
 def test_skew_join_adaptive_aqe_splits_hot_partition(spark, tmp_path):
     """Under the forced-SMJ regime, AQE must (a) mark the join skew=true —
     i.e. actually split the 75%-hot post-shuffle partition instead of
     handing one task the whole key — and (b) leave the answer unchanged."""
-    fn = QUERIES["skew_join_adaptive"].spark_fn
     sf = _multifile_sf(spark, tmp_path)
 
-    baseline = fn(spark, sf).toPandas()  # default regime (AQE broadcasts)
+    # default regime (AQE broadcasts)
+    baseline = QUERIES["skew_join_adaptive"].spark_fn(spark, sf).toPandas()
 
-    saved = _with_confs(spark, _SKEW_CONFS)
-    try:
-        df = fn(spark, sf)
-        got = df.toPandas()  # execute first: AQE finalizes the plan lazily
-        plan = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        _restore_confs(spark, saved)
+    df = skew_join_adaptive(query_session(spark, _SKEW_CONFS), sf)
+    got = df.toPandas()  # execute first: AQE finalizes the plan lazily
+    plan = df._jdf.queryExecution().executedPlan().toString()
 
     assert "isFinalPlan=true" in plan
     assert "SortMergeJoin" in plan, plan[:2000]
@@ -136,17 +115,16 @@ def test_runtime_bloom_filter_join_pruning(spark):
     percent that can match.  Certifies injection + unchanged results."""
     from pyspark.sql import functions as F
 
-    li = (
-        spark.read.parquet(f"{SF_CORRECT}/lineitem.parquet")
-        .select("l_orderkey", "l_quantity")
-    )
-    od = (
-        spark.read.parquet(f"{SF_CORRECT}/orders.parquet")
-        .filter(F.col("o_orderpriority") == "1-URGENT")
-        .select("o_orderkey")
-    )
-
-    def q():
+    def q(session):
+        li = (
+            session.read.parquet(f"{SF_CORRECT}/lineitem.parquet")
+            .select("l_orderkey", "l_quantity")
+        )
+        od = (
+            session.read.parquet(f"{SF_CORRECT}/orders.parquet")
+            .filter(F.col("o_orderpriority") == "1-URGENT")
+            .select("o_orderkey")
+        )
         return (
             li.join(od, li.l_orderkey == od.o_orderkey)
             .agg(
@@ -155,7 +133,7 @@ def test_runtime_bloom_filter_join_pruning(spark):
             )
         )
 
-    baseline = q().collect()
+    baseline = q(spark).collect()
 
     confs = {
         "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
@@ -167,13 +145,9 @@ def test_runtime_bloom_filter_join_pruning(spark):
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
     }
-    saved = _with_confs(spark, confs)
-    try:
-        df = q()
-        got = df.collect()
-        plan = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        _restore_confs(spark, saved)
+    df = q(query_session(spark, confs))
+    got = df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
 
     assert "bloom_filter_agg" in plan, plan[:1500]
     assert "BloomFilterMightContain" in plan or "bloomFilter" in plan

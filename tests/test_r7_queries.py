@@ -152,7 +152,7 @@ def test_simhash_recall_eval_counts_recompute(spark):
         spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
         .filter(F.col("doc_id") % 3 == 0)
     )
-    fps = {r["doc"]: r["simhash"] for r in simhash(d, portable=True).collect()}
+    fps = {r["doc"]: r["simhash"] for r in simhash(d).collect()}
     pred = set()
     for i, a in enumerate(ids):
         for b in ids[i + 1 :]:

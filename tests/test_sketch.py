@@ -36,17 +36,14 @@ def test_heavy_hitters_rejects_bad_support(spark):
 
 def test_bucketed_join_has_no_exchange(spark):
     from acousticbrainz_server_spark.plans.sketch_queries import _bucketed_join
+    from acousticbrainz_server_spark.session import query_session
 
     # at fixture scale Catalyst rightly broadcasts the tiny customer side; the
     # layout proof is for the 100 TB case where BOTH sides are fact-sized, so
     # disable broadcast to surface the bucket-to-bucket sort-merge join
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = _bucketed_join(spark, SF_SMOKE)
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    session = query_session(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"})
+    joined = _bucketed_join(session, SF_SMOKE)
+    plan = joined._jdf.queryExecution().executedPlan().toString()
     # the bucketed layout replaces the join shuffle: no Exchange anywhere in
     # the join subplan.  (A per-task Sort remains: Spark no longer propagates
     # bucketed-scan sort order by default — and at 100 TB buckets span many

@@ -10,6 +10,7 @@ import pytest
 from datetime import datetime, timedelta
 
 import random
+import uuid
 
 from pyspark.sql import functions as F
 
@@ -600,15 +601,17 @@ def test_windowed_aggregation_restart_resumes_from_checkpoint(spark, tmp_path):
     finalized window emitted exactly once ACROSS the restart, none lost,
     none duplicated."""
     from acousticbrainz_server_spark.plans.streaming_queries import (
-        _stream_state_partitions,
+        STREAM_CONF,
         _wma_build_src,
         _wma_windowed_stream,
     )
+    from acousticbrainz_server_spark.session import query_session
 
     _, src_dir = _wma_build_src(spark, "/root/testdata/sf0.001")
+    session = query_session(spark, STREAM_CONF)
 
     def run(ckpt_dir: str, rows_out: list, kill_at: int | None = None) -> None:
-        agg = _wma_windowed_stream(spark, src_dir)
+        agg = _wma_windowed_stream(session, src_dir)
 
         def sink(batch_df, batch_id):
             # raise BEFORE consuming the batch: its offset was WAL-planned
@@ -619,19 +622,18 @@ def test_windowed_aggregation_restart_resumes_from_checkpoint(spark, tmp_path):
                 raise RuntimeError("deterministic mid-backlog kill (test)")
             rows_out.extend(map(tuple, batch_df.collect()))
 
-        with _stream_state_partitions(spark):
-            q = (
-                agg.writeStream.foreachBatch(sink)
-                .outputMode("append")
-                .option("checkpointLocation", ckpt_dir)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                q.awaitTermination(180)
-            except Exception:
-                pass  # the injected kill surfaces as StreamingQueryException
-            assert not q.isActive
+        q = (
+            agg.writeStream.foreachBatch(sink)
+            .outputMode("append")
+            .option("checkpointLocation", ckpt_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            q.awaitTermination(180)
+        except Exception:
+            pass  # the injected kill surfaces as StreamingQueryException
+        assert not q.isActive
 
     oneshot: list = []
     run(str(tmp_path / "ckpt_oneshot"), oneshot)
@@ -661,65 +663,53 @@ def test_windowed_aggregation_restart_rocksdb(spark, tmp_path, changelog):
     upload only the delta; restore replays the changelog onto the last
     snapshot — a different recovery code path, certified separately)."""
     from acousticbrainz_server_spark.plans.streaming_queries import (
+        STREAM_CONF,
+        _CHANGELOG_CONF,
         _ROCKSDB_PROVIDER,
         _STATE_PROVIDER_CONF,
-        _stream_state_partitions,
         _wma_build_src,
         _wma_windowed_stream,
     )
-
-    _CHANGELOG_CONF = (
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    )
+    from acousticbrainz_server_spark.session import query_session
 
     _, src_dir = _wma_build_src(spark, "/root/testdata/sf0.001")
 
-    def run(ckpt_dir: str, rows_out: list, kill_at: int | None = None) -> None:
-        agg = _wma_windowed_stream(spark, src_dir)
+    def run(session, ckpt_dir: str, rows_out: list, kill_at: int | None = None) -> None:
+        agg = _wma_windowed_stream(session, src_dir)
 
         def sink(batch_df, batch_id):
             if kill_at is not None and batch_id == kill_at:
                 raise RuntimeError("deterministic mid-backlog kill (test)")
             rows_out.extend(map(tuple, batch_df.collect()))
 
-        with _stream_state_partitions(spark):
-            q = (
-                agg.writeStream.foreachBatch(sink)
-                .outputMode("append")
-                .option("checkpointLocation", ckpt_dir)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                q.awaitTermination(180)
-            except Exception:
-                pass
-            assert not q.isActive
+        q = (
+            agg.writeStream.foreachBatch(sink)
+            .outputMode("append")
+            .option("checkpointLocation", ckpt_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            q.awaitTermination(180)
+        except Exception:
+            pass
+        assert not q.isActive
 
     # one-shot truth on the DEFAULT (HDFSBacked) provider
     oneshot: list = []
-    run(str(tmp_path / "ckpt_hdfs"), oneshot)
+    run(query_session(spark, STREAM_CONF), str(tmp_path / "ckpt_hdfs"), oneshot)
     assert len(oneshot) > 0
 
-    saved = spark.conf.get(_STATE_PROVIDER_CONF, None)
-    saved_cl = spark.conf.get(_CHANGELOG_CONF, None)
-    spark.conf.set(_STATE_PROVIDER_CONF, _ROCKSDB_PROVIDER)
-    spark.conf.set(_CHANGELOG_CONF, "true" if changelog else "false")
-    try:
-        ckpt = str(tmp_path / "ckpt_rocks")  # PINNED across kill + resume
-        part1: list = []
-        part2: list = []
-        run(ckpt, part1, kill_at=2)
-        run(ckpt, part2)
-    finally:
-        if saved is None:
-            spark.conf.unset(_STATE_PROVIDER_CONF)
-        else:
-            spark.conf.set(_STATE_PROVIDER_CONF, saved)
-        if saved_cl is None:
-            spark.conf.unset(_CHANGELOG_CONF)
-        else:
-            spark.conf.set(_CHANGELOG_CONF, saved_cl)
+    rocks = query_session(spark, {
+        **STREAM_CONF,
+        _STATE_PROVIDER_CONF: _ROCKSDB_PROVIDER,
+        _CHANGELOG_CONF: "true" if changelog else "false",
+    })
+    ckpt = str(tmp_path / "ckpt_rocks")  # PINNED across kill + resume
+    part1: list = []
+    part2: list = []
+    run(rocks, ckpt, part1, kill_at=2)
+    run(rocks, ckpt, part2)
 
     assert sorted(part1 + part2) == sorted(oneshot)  # backend-independent
     assert len(part2) > 0
@@ -736,9 +726,8 @@ def test_dedup_within_watermark_evicts_and_reemits(spark, tmp_path):
     import time as _time
 
     from pyspark.sql import functions as F
-    from acousticbrainz_server_spark.plans.streaming_queries import (
-        _stream_state_partitions,
-    )
+    from acousticbrainz_server_spark.plans.streaming_queries import STREAM_CONF
+    from acousticbrainz_server_spark.session import query_session
 
     src = str(tmp_path / "src")
     os.makedirs(src)
@@ -769,24 +758,23 @@ def test_dedup_within_watermark_evicts_and_reemits(spark, tmp_path):
     schema = spark.read.parquet(src).schema
     out: list = []
     dd = (
-        spark.readStream.schema(schema)
+        query_session(spark, STREAM_CONF).readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
         .withWatermark("ts", "1 day")
         .dropDuplicatesWithinWatermark(["k"])
         .select("k", "ts")
     )
-    with _stream_state_partitions(spark):
-        q = (
-            dd.writeStream.foreachBatch(
-                lambda df, bid: out.extend((r["k"], str(r["ts"])) for r in df.collect())
-            )
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+    q = (
+        dd.writeStream.foreachBatch(
+            lambda df, bid: out.extend((r["k"], str(r["ts"])) for r in df.collect())
         )
-        q.awaitTermination(180)
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(180)
 
     from collections import Counter
     counts = Counter(k for k, _ in out)
@@ -847,7 +835,12 @@ def test_python_stream_sink_kill_resume(spark, tmp_path, fail_point):
 
     register_jsonlines_sink(spark)
     _base, src = _ttb_build_src(spark, "/root/testdata/sf0.001")
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")  # PINNED ckpt
+    # the sink's one-shot strike marker is keyed by the sink path and lives
+    # for the scratch TTL, while pytest reuses tmp_path names across runs:
+    # a unique sink path keeps an earlier run's marker from disarming this
+    # run's injected failure
+    out = str(tmp_path / f"out-{uuid.uuid4().hex[:8]}")
+    ckpt = str(tmp_path / "ckpt")  # PINNED ckpt
 
     q = (
         _ttb_stream(spark, src)
@@ -972,62 +965,51 @@ def test_interval_join_restart_rocksdb(spark, tmp_path, changelog):
     one-shot run on the default provider — every match emitted exactly
     once ACROSS the restart, under both RocksDB commit modes."""
     from acousticbrainz_server_spark.plans.streaming_queries import (
+        STREAM_CONF,
+        _CHANGELOG_CONF,
         _ROCKSDB_PROVIDER,
         _STATE_PROVIDER_CONF,
-        _stream_state_partitions,
     )
+    from acousticbrainz_server_spark.session import query_session
 
-    _CHANGELOG_CONF = (
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    )
     src = _ij_build_src(spark, tmp_path)
 
-    def run(ckpt_dir: str, rows_out: list, kill_at: int | None = None) -> None:
-        joined = _ij_joined(spark, src)
+    def run(session, ckpt_dir: str, rows_out: list, kill_at: int | None = None) -> None:
+        joined = _ij_joined(session, src)
 
         def sink(batch_df, batch_id):
             if kill_at is not None and batch_id == kill_at:
                 raise RuntimeError("deterministic mid-backlog kill (test)")
             rows_out.extend(map(tuple, batch_df.collect()))
 
-        with _stream_state_partitions(spark):
-            q = (
-                joined.writeStream.foreachBatch(sink)
-                .outputMode("append")
-                .option("checkpointLocation", ckpt_dir)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                q.awaitTermination(180)
-            except Exception:
-                pass
-            assert not q.isActive
+        q = (
+            joined.writeStream.foreachBatch(sink)
+            .outputMode("append")
+            .option("checkpointLocation", ckpt_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            q.awaitTermination(180)
+        except Exception:
+            pass
+        assert not q.isActive
 
     # one-shot truth on the DEFAULT (HDFSBacked) provider
     oneshot: list = []
-    run(str(tmp_path / "ckpt_hdfs"), oneshot)
+    run(query_session(spark, STREAM_CONF), str(tmp_path / "ckpt_hdfs"), oneshot)
     assert len(oneshot) > 0  # the backlog yields real attributions
 
-    saved = spark.conf.get(_STATE_PROVIDER_CONF, None)
-    saved_cl = spark.conf.get(_CHANGELOG_CONF, None)
-    spark.conf.set(_STATE_PROVIDER_CONF, _ROCKSDB_PROVIDER)
-    spark.conf.set(_CHANGELOG_CONF, "true" if changelog else "false")
-    try:
-        ckpt = str(tmp_path / "ckpt_rocks")  # PINNED across kill + resume
-        part1: list = []
-        part2: list = []
-        run(ckpt, part1, kill_at=2)
-        run(ckpt, part2)
-    finally:
-        if saved is None:
-            spark.conf.unset(_STATE_PROVIDER_CONF)
-        else:
-            spark.conf.set(_STATE_PROVIDER_CONF, saved)
-        if saved_cl is None:
-            spark.conf.unset(_CHANGELOG_CONF)
-        else:
-            spark.conf.set(_CHANGELOG_CONF, saved_cl)
+    rocks = query_session(spark, {
+        **STREAM_CONF,
+        _STATE_PROVIDER_CONF: _ROCKSDB_PROVIDER,
+        _CHANGELOG_CONF: "true" if changelog else "false",
+    })
+    ckpt = str(tmp_path / "ckpt_rocks")  # PINNED across kill + resume
+    part1: list = []
+    part2: list = []
+    run(rocks, ckpt, part1, kill_at=2)
+    run(rocks, ckpt, part2)
 
     assert sorted(part1 + part2) == sorted(oneshot)  # backend-independent, exactly-once
     assert len(part2) > 0  # the resumed run really advanced the join state
@@ -1062,26 +1044,27 @@ def test_watermark_drop_telemetry_granularity_and_conservation(spark, tmp_path):
     import uuid
 
     from acousticbrainz_server_spark.plans.streaming_queries import (
+        STREAM_CONF,
         _WMA_DELAY_US,
-        _stream_state_partitions,
         _wma_build_src,
         _wma_windowed_stream,
     )
+    from acousticbrainz_server_spark.session import query_session
 
     _, src = _wma_build_src(spark, "/root/testdata/sf0.001")
-    agg = _wma_windowed_stream(spark, src)
+    session = query_session(spark, STREAM_CONF)
+    agg = _wma_windowed_stream(session, src)
     ckpt = str(tmp_path / "ckpt")
     sink = f"wm_telemetry_{uuid.uuid4().hex[:8]}"
-    with _stream_state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    q = (
+        agg.writeStream.format("memory")
+        .queryName(sink)
+        .outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
 
     telemetry = {}
     for p in q.recentProgress:
@@ -1125,7 +1108,7 @@ def test_watermark_drop_telemetry_granularity_and_conservation(spark, tmp_path):
             assert late_rows > len(late_keys) > 0, (late_rows, len(late_keys))
 
     # conservation: emitted + retained-in-state + late-dropped == input
-    emitted = spark.table(sink).agg(F.sum("n_events")).collect()[0][0]
+    emitted = session.table(sink).agg(F.sum("n_events")).collect()[0][0]
     retained = (
         spark.read.format("statestore")
         .load(ckpt)
@@ -1166,16 +1149,15 @@ def test_statestore_reads_on_rocksdb(spark, tmp_path):
     import collections
 
     from acousticbrainz_server_spark.plans.streaming_queries import (
+        STREAM_CONF,
+        _CHANGELOG_CONF,
         _ROCKSDB_PROVIDER,
         _STATE_PROVIDER_CONF,
-        _stream_state_partitions,
         _ttb_build_src,
         _ttb_stream,
     )
+    from acousticbrainz_server_spark.session import query_session
 
-    _CHANGELOG_CONF = (
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    )
     _, src = _ttb_build_src(spark, "/root/testdata/sf0.001")
 
     # batch-derived truth from the mod-4 predicate
@@ -1191,27 +1173,25 @@ def test_statestore_reads_on_rocksdb(spark, tmp_path):
             prefix1[et] += n
 
     def run(ckpt: str, changelog: bool, sink: str):
+        rocks = query_session(spark, {
+            **STREAM_CONF,
+            _STATE_PROVIDER_CONF: _ROCKSDB_PROVIDER,
+            _CHANGELOG_CONF: "true" if changelog else "false",
+        })
         agg = (
-            _ttb_stream(spark, src)
+            _ttb_stream(rocks, src)
             .groupBy("event_type")
             .agg(F.count(F.lit(1)).alias("n_events"))
         )
-        spark.conf.set(_STATE_PROVIDER_CONF, _ROCKSDB_PROVIDER)
-        spark.conf.set(_CHANGELOG_CONF, "true" if changelog else "false")
-        try:
-            with _stream_state_partitions(spark):
-                q = (
-                    agg.writeStream.format("memory")
-                    .queryName(sink)
-                    .outputMode("update")
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
-        finally:
-            spark.conf.unset(_STATE_PROVIDER_CONF)
-            spark.conf.unset(_CHANGELOG_CONF)
+        q = (
+            agg.writeStream.format("memory")
+            .queryName(sink)
+            .outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
 
     def snapshot_counts(ckpt: str, batch_id: int | None = None) -> dict:
         rd = spark.read.format("statestore")
@@ -1272,59 +1252,58 @@ def test_statestore_snapshot_start_batch_read(spark, tmp_path):
     import uuid
 
     from acousticbrainz_server_spark.plans.streaming_queries import (
-        _stream_state_partitions,
+        STREAM_CONF,
         _ttb_build_src,
         _ttb_stream,
     )
+    from acousticbrainz_server_spark.session import query_session
 
     _, src = _ttb_build_src(spark, "/root/testdata/sf0.001")
     ckpt = str(tmp_path / "ckpt")
+    session = query_session(spark, {
+        **STREAM_CONF,
+        "spark.sql.streaming.stateStore.minDeltasForSnapshot": "1",
+        "spark.sql.streaming.stateStore.maintenanceInterval": "300ms",
+    })
     agg = (
-        _ttb_stream(spark, src)
+        _ttb_stream(session, src)
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    spark.conf.set("spark.sql.streaming.stateStore.minDeltasForSnapshot", "1")
-    spark.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "300ms")
+    q = (
+        agg.writeStream.format("memory")
+        .queryName(f"snap_read_{uuid.uuid4().hex[:8]}")
+        .outputMode("update")
+        .option("checkpointLocation", ckpt)
+        .trigger(processingTime="300 milliseconds")
+        .start()
+    )
     try:
-        with _stream_state_partitions(spark):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(f"snap_read_{uuid.uuid4().hex[:8]}")
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(processingTime="300 milliseconds")
-                .start()
+        # keep the query ACTIVE (providers stay loaded, maintenance
+        # keeps firing): first wait for the whole 1000-row backlog
+        # to drain, THEN for a maintenance snapshot to land
+        deadline = time.time() + 60
+        drained = False
+        while time.time() < deadline and not drained:
+            fed = sum(
+                (p if isinstance(p, dict) else json.loads(p.json))[
+                    "numInputRows"
+                ]
+                for p in q.recentProgress
             )
-            try:
-                # keep the query ACTIVE (providers stay loaded, maintenance
-                # keeps firing): first wait for the whole 1000-row backlog
-                # to drain, THEN for a maintenance snapshot to land
-                deadline = time.time() + 60
-                drained = False
-                while time.time() < deadline and not drained:
-                    fed = sum(
-                        (p if isinstance(p, dict) else json.loads(p.json))[
-                            "numInputRows"
-                        ]
-                        for p in q.recentProgress
-                    )
-                    drained = fed >= 1000
-                    if not drained:
-                        time.sleep(0.3)
-                snaps: list = []
-                while time.time() < deadline and not snaps:
-                    snaps = glob.glob(
-                        os.path.join(ckpt, "state", "0", "0", "*.snapshot")
-                    )
-                    if not snaps:
-                        time.sleep(0.5)
-            finally:
-                q.stop()
-                q.awaitTermination(60)
+            drained = fed >= 1000
+            if not drained:
+                time.sleep(0.3)
+        snaps: list = []
+        while time.time() < deadline and not snaps:
+            snaps = glob.glob(
+                os.path.join(ckpt, "state", "0", "0", "*.snapshot")
+            )
+            if not snaps:
+                time.sleep(0.5)
     finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.minDeltasForSnapshot")
-        spark.conf.unset("spark.sql.streaming.stateStore.maintenanceInterval")
+        q.stop()
+        q.awaitTermination(60)
     # the backlog must have drained before the stop for the comparison to
     # be against the full-input state
     done = {
@@ -1359,12 +1338,12 @@ def test_stateful_restart_pins_checkpoint_shuffle_partitions(spark, tmp_path):
     """r11 verdict #3: state is keyed by partition id, so a stateful
     restart MUST keep the checkpoint's state partitioning even when the
     session's spark.sql.shuffle.partitions differs — this test turns the
-    implicit invariant behind _stream_state_partitions into an explicit
-    certification.  Protocol: run the windowed aggregation with the pinned
-    8 state partitions, kill mid-backlog, then RESUME under session
+    implicit invariant behind STREAM_CONF into an explicit certification.
+    Protocol: run the windowed aggregation with STREAM_CONF's 4 state
+    partitions, kill mid-backlog, then RESUME on a session with
     shuffle.partitions=3.  Spark's contract (certified here, 4.1.2): the
     checkpoint's offset-log conf WINS silently — no error, no reshuffle of
-    state; the resumed batches still run 8 state partitions (observable in
+    state; the resumed batches still run 4 state partitions (observable in
     StreamingQueryProgress.stateOperators[].numShufflePartitions and in the
     on-disk state layout), and the union of outputs stays exact.  A
     mismatch therefore CANNOT corrupt state by mis-keying partitions; the
@@ -1373,17 +1352,18 @@ def test_stateful_restart_pins_checkpoint_shuffle_partitions(spark, tmp_path):
     import json
 
     from acousticbrainz_server_spark.plans.streaming_queries import (
-        _STREAM_STATE_PARTITIONS,
-        _stream_state_partitions,
+        STREAM_CONF,
         _wma_build_src,
         _wma_windowed_stream,
     )
+    from acousticbrainz_server_spark.session import query_session
 
+    n_state = int(STREAM_CONF["spark.sql.shuffle.partitions"])
     _, src_dir = _wma_build_src(spark, "/root/testdata/sf0.001")
     progresses: list = []
 
-    def run(ckpt_dir: str, rows_out: list, kill_at: int | None = None) -> None:
-        agg = _wma_windowed_stream(spark, src_dir)
+    def run(session, ckpt_dir: str, rows_out: list, kill_at: int | None = None) -> None:
+        agg = _wma_windowed_stream(session, src_dir)
 
         def sink(batch_df, batch_id):
             if kill_at is not None and batch_id == kill_at:
@@ -1404,46 +1384,38 @@ def test_stateful_restart_pins_checkpoint_shuffle_partitions(spark, tmp_path):
         assert not q.isActive
         progresses.extend(q.recentProgress)
 
-    # one-shot truth at the pinned 8 partitions
+    # one-shot truth at STREAM_CONF's partition count
     oneshot: list = []
-    with _stream_state_partitions(spark):
-        run(str(tmp_path / "ckpt_oneshot"), oneshot)
+    run(query_session(spark, STREAM_CONF), str(tmp_path / "ckpt_oneshot"), oneshot)
     assert len(oneshot) > 0
 
     ckpt = str(tmp_path / "ckpt_pinned")
     part1: list = []
     part2: list = []
-    with _stream_state_partitions(spark):
-        run(ckpt, part1, kill_at=2)
+    run(query_session(spark, STREAM_CONF), ckpt, part1, kill_at=2)
 
     # RESUME under a DIFFERENT session shuffle-partition count
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "3")
     progresses.clear()
-    try:
-        run(ckpt, part2)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
+    run(query_session(spark, {"spark.sql.shuffle.partitions": "3"}), ckpt, part2)
 
     # exactness across the restart despite the conf mismatch
     assert sorted(part1 + part2) == sorted(oneshot)
     assert len(part2) > 0
 
     # the resumed batches really ran the CHECKPOINT's partitioning, not the
-    # session's: every progress reports _STREAM_STATE_PARTITIONS state partitions
+    # session's: every progress reports STREAM_CONF's state partitions
     n_parts = {
         op["numShufflePartitions"]
         for p in progresses
         for op in json.loads(p.json)["stateOperators"]
     }
-    assert n_parts == {_STREAM_STATE_PARTITIONS}, n_parts
+    assert n_parts == {n_state}, n_parts
 
-    # and the on-disk state layout still has exactly _STREAM_STATE_PARTITIONS
-    # partition dirs
+    # and the on-disk state layout still has exactly n_state partition dirs
     state_parts = sorted(
         int(d) for d in os.listdir(os.path.join(ckpt, "state", "0")) if d.isdigit()
     )
-    assert state_parts == list(range(_STREAM_STATE_PARTITIONS)), state_parts
+    assert state_parts == list(range(n_state)), state_parts
 
     # the pinning mechanism is visible in the checkpoint itself: the offset
     # log records the conf the query was STARTED with
@@ -1451,4 +1423,4 @@ def test_stateful_restart_pins_checkpoint_shuffle_partitions(spark, tmp_path):
     with open(os.path.join(ckpt, "offsets", off_files[-1])) as f:
         lines = f.read().splitlines()
     conf = json.loads(lines[1])["conf"]
-    assert conf["spark.sql.shuffle.partitions"] == str(_STREAM_STATE_PARTITIONS)
+    assert conf["spark.sql.shuffle.partitions"] == str(n_state)

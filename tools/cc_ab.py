@@ -34,7 +34,7 @@ def run_variant(spark, sf_dir: str, fused: bool) -> float:
     # actions), exactly as bench.py bills it (spark_fn(...).toPandas())
     t0 = time.time()
     d = load_table(spark, sf_dir, "documents")
-    pairs = simhash_neardup_pairs(d, max_hamming=3, portable=True, dedupe=not fused)
+    pairs = simhash_neardup_pairs(d, max_hamming=3, dedupe=not fused)
     out = neardup_clusters(d, pairs, id_col="doc_id", dedupe_edges=fused)
     out.toPandas()
     dt = time.time() - t0

@@ -59,9 +59,6 @@ def child(cpus: int, sf: str, reps: int, names: list[str]) -> None:
                 if i > 0:
                     best = dt if best is None else min(best, dt)
                 spark.catalog.clearCache()
-                for t in spark.catalog.listTables():
-                    if t.isTemporary:
-                        spark.catalog.dropTempView(t.name)
         except Exception as e:  # noqa: BLE001 — sweep must survive any query
             print(f"ERR {name}: {str(e).splitlines()[0][:200]}", file=sys.stderr, flush=True)
             best = -1.0
@@ -80,6 +77,8 @@ def main() -> None:
     ap.add_argument("--child", type=int, default=None, help=argparse.SUPPRESS)
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
+    if args.reps < 1:
+        ap.error("--reps must be >= 1 (the first run is a warm-up)")
 
     if args.child is not None:
         child(args.child, args.sf, args.reps, args.names)
@@ -106,7 +105,11 @@ def main() -> None:
             capture_output=True, text=True, env=env,
         )
         sys.stderr.write(proc.stderr[-4000:])
-        results[c] = json.loads(proc.stdout.strip().splitlines()[-1])
+        lines = proc.stdout.strip().splitlines()
+        if proc.returncode != 0 or not lines:
+            sys.exit(f"core_scaling: the cpus={c} child exited {proc.returncode} "
+                     f"with {'no' if not lines else 'partial'} output (stderr above)")
+        results[c] = json.loads(lines[-1])
         meta[c] = {
             "t_start": round(t0, 1),
             "t_end": round(time.time(), 1),

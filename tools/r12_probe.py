@@ -68,9 +68,6 @@ def main() -> None:
                 if i > 0:
                     times.append(dt)
                 spark.catalog.clearCache()
-                for t in spark.catalog.listTables():
-                    if t.isTemporary:
-                        spark.catalog.dropTempView(t.name)
             print(f"{name}: min={min(times):.3f} med={sorted(times)[len(times)//2]:.3f} all={[round(t,3) for t in times]}", flush=True)
             spark.sparkContext.setJobDescription(None)
     spark.stop()

@@ -78,7 +78,7 @@ def _query(spark, sf_dir: str, new: bool):
         .select("doc_a", "doc_b")
     )
     cand = (
-        minhash_neardup_pairs(d, n_hashes=8, n_bands=4, portable=True)
+        minhash_neardup_pairs(d, n_hashes=8, n_bands=4)
         .filter(F.col("est_jaccard") >= 0.5)
         .select("doc_a", "doc_b")
     )

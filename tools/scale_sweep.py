@@ -148,9 +148,6 @@ def main() -> None:
         out[name] = row
         flag = " <-- CLIFF?" if row.get("growth", 0) > flag_ratio else ""
         print(name, json.dumps(row), flag, flush=True)
-        for t in spark.catalog.listTables():
-            if t.isTemporary:
-                spark.catalog.dropTempView(t.name)
         spark.catalog.clearCache()
 
     cliffs = {n: r for n, r in out.items() if r.get("growth", 0) > flag_ratio}

@@ -24,7 +24,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from acousticbrainz_server_spark.plans.registry import QUERIES, _load_all
-from acousticbrainz_server_spark.session import get_spark
+from acousticbrainz_server_spark.session import get_spark, query_scope
 
 DEFAULT_NAMES = ["cdc_chunk_dedup", "neardup_cluster_assign", "ngram_jaccard_neardup"]
 CONF = "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold"
@@ -40,17 +40,17 @@ def join_nodes(df) -> dict[str, int]:
 
 
 def run_once(spark, name: str, sf: str, setting: str) -> tuple[float, dict]:
-    spark.conf.set(CONF, setting)
+    # the registered spark_fn runs on a child session that never sees a
+    # conf set on ``spark``; run the query body on a child carrying CONF
+    spec = QUERIES[name]
     spark.sparkContext.setJobDescription(f"shj_ab {name} {setting}")
     t0 = time.time()
-    df = QUERIES[name].spark_fn(spark, sf)
-    df.toPandas()
+    with query_scope(spark, {**(spec.conf or {}), CONF: setting}) as session:
+        df = spec.spark_fn.__wrapped__(session, sf)
+        df.toPandas()
     dt = time.time() - t0
     nodes = join_nodes(df)
     spark.catalog.clearCache()
-    for t in spark.catalog.listTables():
-        if t.isTemporary:
-            spark.catalog.dropTempView(t.name)
     return dt, nodes
 
 
