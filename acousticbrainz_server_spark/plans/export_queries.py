@@ -23,9 +23,7 @@ semantics, not throughput.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.scalar import round_half_up, sql_round_half_up
+from ..session import scratch_dir
 from ..sources.dumps import (
     FEATURE_DUMP_COLUMNS,
     dump_features_csv,
@@ -53,10 +52,9 @@ def _ab(table: str) -> str:
 
 
 def _scratch(sf_dir: str, name: str) -> str:
-    """Process-unique scratch dir: concurrent harness processes (bench + gate)
-    must never overwrite each other's dump files."""
-    tag = hashlib.md5(f"{os.path.abspath(sf_dir)}:{os.getpid()}".encode()).hexdigest()[:8]
-    return os.path.join(tempfile.gettempdir(), "abspark_dumps", tag, name)
+    """This process's dump dir ``name``: concurrent harness processes (bench
+    + gate) never overwrite each other's dump files."""
+    return os.path.join(scratch_dir("dumps", os.path.abspath(sf_dir)), name)
 
 
 def _ll(spark: SparkSession) -> DataFrame:

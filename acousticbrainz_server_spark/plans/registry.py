@@ -109,7 +109,8 @@ def _load_all() -> None:
 #       cross_snapshot_dedup, corpus_build_pipeline);
 #     - neardup_cluster_assign (connected_components explode
 #       symmetrization + fused edge dedup);
-#     - the scratch-TTL touch_scratch_tag reuse paths + the then-derived
+#     - the scratch reuse paths (then refreshing a reaper TTL; now one
+#       per-process tree built by session.build_once) + the then-derived
 #       stream state-partition count, max(4, cpus//8) (same value at the
 #       driver's core counts, but the code path changed; it is now the
 #       fixed STREAM_CONF that streaming_queries.py declares per query):

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..functions.scalar import round_half_up, sql_round_half_up
 from ..operators.sketch import heavy_hitters
+from ..session import scratch_dir
 from ..sources.tables import load_table
 from .registry import query
 
@@ -212,15 +213,13 @@ def _bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the bucketed layout replaces the shuffle) before the rollup's own
     aggregation exchange.
     """
-    import hashlib
     import os
-    import tempfile
 
-    # process-unique tag: concurrent harness processes (bench + gate) must
-    # never overwrite each other's bucket files; within one session the
-    # catalog's tableExists makes the write once-only anyway
-    tag = hashlib.md5(f"{os.path.abspath(sf_dir)}:{os.getpid()}".encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), "abspark_bucketed", tag)
+    # this process's scratch: concurrent harness processes (bench + gate)
+    # never overwrite each other's bucket files; the catalog is per process
+    # too, and its tableExists makes the write once-only
+    base = scratch_dir("bucketed", os.path.abspath(sf_dir))
+    tag = os.path.basename(base)
     for name, key in (("orders", "o_custkey"), ("customer", "c_custkey")):
         tbl = f"bjr_{name}_{tag}"
         if not spark.catalog.tableExists(tbl):
@@ -239,9 +238,6 @@ def _bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .format("parquet")
                 .saveAsTable(tbl)
             )
-    from ..session import touch_scratch_tag
-
-    touch_scratch_tag(base)  # reuse refreshes the reaper TTL (r12 verdict #3)
     orders = spark.table(f"bjr_orders_{tag}")
     customer = spark.table(f"bjr_customer_{tag}")
     return orders.join(customer, orders["o_custkey"] == customer["c_custkey"])

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.scalar import round_half_up, sql_round_half_up
-from ..session import touch_scratch_tag
+from ..session import build_once, fresh_run_dir, scratch_dir
 from ..sources.tables import load_events_stream, load_table, local_frame
 from .registry import query
 
@@ -388,28 +388,25 @@ def streaming_enrich_dim_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_upsert_foreachbatch_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import os
     import shutil
-    import tempfile
 
     from pyspark.sql import Window
 
-    from ..sources.tables import load_table
-
-    tag = hashlib.md5(f"{os.path.abspath(sf_dir)}:{os.getpid()}".encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), "abspark_upsert", tag)
-    src_dir = os.path.join(base, "src")
-    state_dir = os.path.join(base, "state")
+    base = scratch_dir("upsert", os.path.abspath(sf_dir))
+    # the (ts-normalized) events pre-split into 4 files => 4 micro-batches;
+    # content-stable, so reused across runs in this process
+    src_dir = build_once(
+        os.path.join(base, "src"),
+        lambda tmp: load_table(spark, sf_dir, "events")
+        .select("user_id", "event_id", "ts", "event_type")
+        .repartition(4)
+        .write.parquet(tmp),
+    )
     # fresh state every run (the merge is idempotent over the same input,
-    # but a clean slate keeps the run self-describing); the 4-file source
-    # split is content-stable and reused across runs in this process
-    shutil.rmtree(state_dir, ignore_errors=True)
-    if not os.path.exists(os.path.join(src_dir, "_SUCCESS")):
-        # pre-split the (ts-normalized) events into 4 files => 4 micro-batches
-        ev = load_table(spark, sf_dir, "events").select("user_id", "event_id", "ts", "event_type")
-        ev.repartition(4).write.mode("overwrite").parquet(src_dir)
-    touch_scratch_tag(base)
+    # but a clean slate keeps the run self-describing)
+    run = fresh_run_dir(base, "run")
+    state_dir = os.path.join(run, "state")
     schema = spark.read.parquet(src_dir).schema
 
     def upsert(batch_df, batch_id):
@@ -423,7 +420,7 @@ def streaming_upsert_foreachbatch_q(spark: SparkSession, sf_dir: str) -> DataFra
             merged = s.read.parquet(state_dir).unionByName(batch_df)
         w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
         latest = merged.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
-        nxt = os.path.join(base, "state_next")
+        nxt = os.path.join(run, "state_next")
         latest.write.mode("overwrite").parquet(nxt)
         shutil.rmtree(state_dir, ignore_errors=True)
         os.rename(nxt, state_dir)
@@ -892,36 +889,24 @@ def _sic_pack(spark: SparkSession, state_dir: str) -> DataFrame:
     oracle=_sic_oracle(),
 )
 def streaming_incremental_corpus_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob as _glob
-    import hashlib
     import os
-    import shutil
-    import tempfile
-    import uuid
 
-    tag = hashlib.md5(f"{os.path.abspath(sf_dir)}:{os.getpid()}".encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), "abspark_inc_corpus", tag)
-    src_dir = os.path.join(base, "src")
-    state_dir = os.path.join(base, "state")
-    # fresh state per invocation, including swap staging leftovers
-    for d in (state_dir, state_dir + "_next", state_dir + "_old"):
-        shutil.rmtree(d, ignore_errors=True)
-    for stale in _glob.glob(os.path.join(base, "ckpt_*")):
-        shutil.rmtree(stale, ignore_errors=True)
-    if not os.path.exists(os.path.join(src_dir, "_SUCCESS")):
-        load_table(spark, sf_dir, "documents").select(
-            "doc_id", "source", "lang", "text"
-        ).repartition(_SIC_BATCHES).write.mode("overwrite").parquet(src_dir)
-    touch_scratch_tag(base)
-
-    # fresh checkpoint per invocation: each run replays the whole
+    base = scratch_dir("inc_corpus", os.path.abspath(sf_dir))
+    src_dir = build_once(
+        os.path.join(base, "src"),
+        lambda tmp: load_table(spark, sf_dir, "documents")
+        .select("doc_id", "source", "lang", "text")
+        .repartition(_SIC_BATCHES)
+        .write.parquet(tmp),
+    )
+    # fresh state and checkpoint per invocation: each run replays the whole
     # bounded backlog (the gate recomputes from scratch); the PINNED-
     # checkpoint production path — kill mid-backlog, restart, resume
     # from the offset log with the state carried — is certified by
     # tests/test_streaming.py::test_incremental_corpus_restart_*
-    q = _sic_start_stream(
-        spark, src_dir, state_dir, os.path.join(base, "ckpt_" + uuid.uuid4().hex[:8])
-    )
+    run = fresh_run_dir(base, "run")
+    state_dir = os.path.join(run, "state")
+    q = _sic_start_stream(spark, src_dir, state_dir, os.path.join(run, "ckpt"))
     q.awaitTermination()
 
     return _sic_pack(spark, state_dir)
@@ -935,22 +920,35 @@ _WMA_RECENT_US = 5 * 86_400_000_000  # the last 5 days arrive in the final file
 _WMA_SINK = "streaming_watermark_audit_sink"
 
 
+def _write_mtime_ordered(df: DataFrame, preds: list, dst: str) -> None:
+    """Write ``df.filter(pred)`` for each ``pred`` as ONE parquet file
+    ``f<i>.parquet`` in the new directory ``dst``, with ascending mtimes:
+    mtime IS the stream order, so a ``maxFilesPerTrigger=1`` stream reads
+    file i as micro-batch i."""
+    import os
+    import shutil
+    import time
+
+    os.makedirs(dst)
+    now = time.time()
+    for i, pred in enumerate(preds):
+        tmp = os.path.join(dst, f"_tmp_f{i}")
+        df.filter(pred).repartition(1).write.parquet(tmp)
+        part = next(p for p in os.listdir(tmp) if p.endswith(".parquet"))
+        out = os.path.join(dst, f"f{i}.parquet")
+        os.rename(os.path.join(tmp, part), out)
+        shutil.rmtree(tmp)
+        os.utime(out, (now - 100 + i * 10, now - 100 + i * 10))
+
+
 def _wma_build_src(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Materialize the 4-file mtime-ordered watermark-audit backlog (shared
     by the append- and update-mode audits): f0 bulk on-time (event_id%7!=0),
     f1 on-time spacer (%7==0), f2 the 10% late sample, f3 the final
-    ``_WMA_RECENT_US`` days.  Idempotent per (sf_dir, pid)."""
-    import hashlib
+    ``_WMA_RECENT_US`` days.  Built once per sf_dir and process."""
     import os
-    import shutil
-    import tempfile
 
-    tag = hashlib.md5(f"{os.path.abspath(sf_dir)}:{os.getpid()}".encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), "abspark_wm_audit", tag)
-    src_dir = os.path.join(base, "src")
-    if not os.path.exists(os.path.join(src_dir, "_DONE")):
-        shutil.rmtree(src_dir, ignore_errors=True)
-        os.makedirs(src_dir)
+    def build(tmp: str) -> None:
         ev = load_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "ts", "event_type"
         )
@@ -958,27 +956,12 @@ def _wma_build_src(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         cut = F.lit(max_ts) - F.expr(f"INTERVAL {_WMA_RECENT_US // 86_400_000_000} DAYS")
         recent = F.col("ts") > cut
         late = (F.col("event_id") % 10 == 0) & ~recent
-        splits = [
-            ("f0", ~late & ~recent & (F.col("event_id") % 7 != 0)),
-            ("f1", ~late & ~recent & (F.col("event_id") % 7 == 0)),
-            ("f2", late),
-            ("f3", recent),
-        ]
-        import time as _time
+        on_time = ~late & ~recent
+        spacer = F.col("event_id") % 7 == 0
+        _write_mtime_ordered(ev, [on_time & ~spacer, on_time & spacer, late, recent], tmp)
 
-        now = _time.time()
-        for i, (name, pred) in enumerate(splits):
-            tmp = os.path.join(base, f"tmp_{name}")
-            ev.filter(pred).repartition(1).write.mode("overwrite").parquet(tmp)
-            part = [p for p in os.listdir(tmp) if p.endswith(".parquet")][0]
-            dst = os.path.join(src_dir, f"{name}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            shutil.rmtree(tmp, ignore_errors=True)
-            # mtime IS the stream order: one file per micro-batch, ascending
-            os.utime(dst, (now - 100 + i * 10, now - 100 + i * 10))
-        open(os.path.join(src_dir, "_DONE"), "w").write("ok\n")
-    touch_scratch_tag(base)
-    return base, src_dir
+    base = scratch_dir("wm_audit", os.path.abspath(sf_dir))
+    return base, build_once(os.path.join(base, "src"), build)
 
 
 def _wma_windowed_stream(spark: SparkSession, src_dir: str) -> DataFrame:
@@ -1067,26 +1050,13 @@ _CHANGELOG_CONF = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing
 def _wma_run_audit(spark: SparkSession, sf_dir: str, sink: str) -> DataFrame:
     """Shared body of the append-mode watermark audits; the state store
     backend is whatever the session's conf names."""
-    import glob as _glob
-    import os
-    import shutil
-    import uuid
-
     base, src_dir = _wma_build_src(spark, sf_dir)
-    # '-' delimits the sink name: with '_' the plain audit's glob would
-    # prefix-match (and delete) the '<sink>_rocksdb' audit's checkpoints,
-    # since one sink name extends the other
-    for stale in _glob.glob(os.path.join(base, f"ckpt-{sink}-*")):
-        shutil.rmtree(stale, ignore_errors=True)
     agg = _wma_windowed_stream(spark, src_dir)
     q = (
         agg.writeStream.format("memory")
         .queryName(sink)
         .outputMode("append")
-        .option(
-            "checkpointLocation",
-            os.path.join(base, f"ckpt-{sink}-" + uuid.uuid4().hex[:8]),
-        )
+        .option("checkpointLocation", fresh_run_dir(base, f"ckpt-{sink}"))
         .trigger(availableNow=True)
         .start()
     )
@@ -1182,16 +1152,11 @@ def _wmu_oracle() -> str:
     oracle=_wmu_oracle(),
 )
 def streaming_watermark_update_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob as _glob
     import os
-    import shutil
-    import uuid
 
     base, src_dir = _wma_build_src(spark, sf_dir)
-    for stale in _glob.glob(os.path.join(base, "updckpt_*")):
-        shutil.rmtree(stale, ignore_errors=True)
-    out_dir = os.path.join(base, "upd_out")
-    shutil.rmtree(out_dir, ignore_errors=True)
+    run = fresh_run_dir(base, "upd")
+    out_dir = os.path.join(run, "out")
     agg = _wma_windowed_stream(spark, src_dir)
 
     def sink(batch_df, batch_id):
@@ -1202,7 +1167,7 @@ def streaming_watermark_update_audit_q(spark: SparkSession, sf_dir: str) -> Data
     q = (
         agg.writeStream.foreachBatch(sink)
         .outputMode("update")
-        .option("checkpointLocation", os.path.join(base, "updckpt_" + uuid.uuid4().hex[:8]))
+        .option("checkpointLocation", os.path.join(run, "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
@@ -1241,24 +1206,11 @@ _SSRC_SINK = "streaming_state_introspect_sink"
 )
 def streaming_state_introspection_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     ev = load_events_stream(spark, sf_dir)
     agg = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
-    # pid-tagged base (same reason as _wma_build_src): a shared base whose
-    # siblings are rmtree'd at invocation start would let a concurrent
-    # process (dual-SF gate, bench overlapping a driver run) delete a LIVE
-    # checkpoint or invalidate a lazily-read statestore DataFrame.  Each
-    # process cleans only within its own tag.
-    base = os.path.join(
-        tempfile.gettempdir(), f"abspark_state_introspect_{os.getpid()}"
-    )
-    if os.path.isdir(base):  # each invocation reads only its own checkpoint
-        for stale in os.listdir(base):
-            shutil.rmtree(os.path.join(base, stale), ignore_errors=True)
-    ckpt = os.path.join(base, uuid.uuid4().hex[:12])
+    # each invocation reads only its own checkpoint
+    ckpt = fresh_run_dir(scratch_dir("state_introspect", os.path.abspath(sf_dir)), "ckpt")
     q = (
         agg.writeStream.format("memory")
         .queryName(_SSRC_SINK)
@@ -1286,16 +1238,13 @@ def _ttb_build_src(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     r11 streaming-depth family shares: file k holds exactly the events with
     ``event_id % 4 == k``, so micro-batch k's content is a pure predicate a
     SQL oracle can reconstruct (``GROUP BY event_id % 4``) — the same trick
-    ``_wma_build_src`` uses with mtime as the stream order.  Idempotent per
-    (sf_dir, pid, source-content fingerprint) — the fingerprint (mtime+size
-    of every file under the events table path) keys the cache tag, so a
-    regenerated testdata dir or a recycled pid hitting a surviving /tmp
+    ``_wma_build_src`` uses with mtime as the stream order.  Built once per
+    process and (sf_dir, source-content fingerprint) — the fingerprint
+    (mtime+size of every file under the events table path) is part of the
+    scratch key, so a testdata dir regenerated while the process runs
     rebuilds instead of silently feeding stale batches (ADVICE r11)."""
     import hashlib
     import os
-    import shutil
-    import tempfile
-    import time as _time
 
     ev_path = os.path.join(os.path.abspath(sf_dir), "events.parquet")
     fp = hashlib.md5()
@@ -1306,31 +1255,15 @@ def _ttb_build_src(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     elif os.path.exists(ev_path):
         st = os.stat(ev_path)
         fp.update(f"{st.st_size}:{st.st_mtime_ns}".encode())
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{os.getpid()}:{fp.hexdigest()}".encode()
-    ).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), "abspark_ttbatch", tag)
-    src_dir = os.path.join(base, "src")
-    if not os.path.exists(os.path.join(src_dir, "_DONE")):
-        shutil.rmtree(src_dir, ignore_errors=True)
-        os.makedirs(src_dir)
-        ev = load_table(spark, sf_dir, "events").select(
-            "event_id", "user_id", "event_type", "value"
-        )
-        now = _time.time()
-        for k in range(_TTB_BATCHES):
-            tmp = os.path.join(base, f"tmp_{k}")
-            ev.filter(F.col("event_id") % _TTB_BATCHES == k).repartition(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            part = [p for p in os.listdir(tmp) if p.endswith(".parquet")][0]
-            dst = os.path.join(src_dir, f"f{k}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            shutil.rmtree(tmp, ignore_errors=True)
-            # mtime IS the stream order: one file per micro-batch, ascending
-            os.utime(dst, (now - 100 + k * 10, now - 100 + k * 10))
-        open(os.path.join(src_dir, "_DONE"), "w").write("ok\n")
-    touch_scratch_tag(base)
+    base = scratch_dir("ttbatch", os.path.abspath(sf_dir), fp.hexdigest())
+    src_dir = build_once(
+        os.path.join(base, "src"),
+        lambda tmp: _write_mtime_ordered(
+            load_table(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "value"),
+            [F.col("event_id") % _TTB_BATCHES == k for k in range(_TTB_BATCHES)],
+            tmp,
+        ),
+    )
     return base, src_dir
 
 
@@ -1350,17 +1283,8 @@ def _ttb_run_count_stream(spark: SparkSession, sf_dir: str, sink_name: str) -> s
     """Run the per-event_type counting aggregation over the 4-batch backlog
     to completion (update mode) and return the checkpoint path — the state
     the time-travel and change-feed readers then query."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     base, src_dir = _ttb_build_src(spark, sf_dir)
-    # per-invocation checkpoint under the pid-tagged base; clean own leftovers
-    for stale in os.listdir(base):
-        if stale.startswith("ckpt-" + sink_name + "-"):
-            shutil.rmtree(os.path.join(base, stale), ignore_errors=True)
-    ckpt = os.path.join(base, f"ckpt-{sink_name}-{uuid.uuid4().hex[:8]}")
+    ckpt = fresh_run_dir(base, f"ckpt-{sink_name}")
     agg = _ttb_stream(spark, src_dir).groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events")
     )
@@ -1493,10 +1417,6 @@ def streaming_state_changefeed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_observe_metrics_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import uuid
-
     from pyspark.sql.types import (
         DoubleType,
         IntegerType,
@@ -1506,10 +1426,7 @@ def streaming_observe_metrics_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     base, src_dir = _ttb_build_src(spark, sf_dir)
-    for stale in os.listdir(base):
-        if stale.startswith("ckpt-obs-"):
-            shutil.rmtree(os.path.join(base, stale), ignore_errors=True)
-    ckpt = os.path.join(base, f"ckpt-obs-{uuid.uuid4().hex[:8]}")
+    ckpt = fresh_run_dir(base, "ckpt-obs")
     observed = _ttb_stream(spark, src_dir).observe(
         "batch_metrics",
         F.count(F.lit(1)).alias("n_rows"),
@@ -1592,8 +1509,6 @@ def streaming_observe_metrics_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_python_sink_rollup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
-    import uuid
 
     from ..sources.pydatasource import (
         committed_stream_sink_files,
@@ -1602,10 +1517,7 @@ def streaming_python_sink_rollup_q(spark: SparkSession, sf_dir: str) -> DataFram
 
     register_jsonlines_sink(spark)
     base, src_dir = _ttb_build_src(spark, sf_dir)
-    for stale in os.listdir(base):
-        if stale.startswith("pysink-"):
-            shutil.rmtree(os.path.join(base, stale), ignore_errors=True)
-    run = os.path.join(base, f"pysink-{uuid.uuid4().hex[:8]}")
+    run = fresh_run_dir(base, "pysink")
     out, ckpt = os.path.join(run, "out"), os.path.join(run, "ckpt")
     q = (
         _ttb_stream(spark, src_dir)
@@ -1657,9 +1569,6 @@ def streaming_python_sink_rollup_q(spark: SparkSession, sf_dir: str) -> DataFram
 )
 def streaming_state_join_introspection_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     purchases = (
         load_events_stream(spark, sf_dir)
@@ -1686,13 +1595,7 @@ def streaming_state_join_introspection_q(spark: SparkSession, sf_dir: str) -> Da
         F.expr("p_user = c_user AND c_ts BETWEEN p_ts - interval 24 hours AND p_ts"),
         "inner",
     )
-    base = os.path.join(
-        tempfile.gettempdir(), f"abspark_join_introspect_{os.getpid()}"
-    )
-    if os.path.isdir(base):  # clean only within this pid's tag
-        for stale in os.listdir(base):
-            shutil.rmtree(os.path.join(base, stale), ignore_errors=True)
-    ckpt = os.path.join(base, uuid.uuid4().hex[:12])
+    ckpt = fresh_run_dir(scratch_dir("join_introspect", os.path.abspath(sf_dir)), "ckpt")
     q = (
         joined.writeStream.format("noop")
         .option("checkpointLocation", ckpt)
@@ -1779,16 +1682,8 @@ def streaming_state_join_introspection_q(spark: SparkSession, sf_dir: str) -> Da
     """,
 )
 def streaming_join_state_changefeed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     base, src_dir = _ttb_build_src(spark, sf_dir)
-    for stale in os.listdir(base):
-        if stale.startswith("ckpt-jcf-"):
-            shutil.rmtree(os.path.join(base, stale), ignore_errors=True)
-    ckpt = os.path.join(base, f"ckpt-jcf-{uuid.uuid4().hex[:8]}")
+    ckpt = fresh_run_dir(base, "ckpt-jcf")
 
     def side_stream(et: str, idc: str, userc: str, tsc: str) -> DataFrame:
         return (

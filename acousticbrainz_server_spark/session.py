@@ -23,12 +23,25 @@ query's conf, temp views, registered UDTFs/data sources and streaming sinks
 stay on the child, so no query changes the caller's session or a concurrent
 query's.  Children share the SparkContext (so everything set on this
 builder) and the cache.
+
+Scratch files (stream sources and checkpoints, dump round trips, bucketed
+tables) live in one tree per process, ``<tmp>/abspark_<pid>/``
+(:func:`scratch_dir`).  Shared inputs are built once per process and key
+(:func:`build_once`), per-run output goes to a fresh dir
+(:func:`fresh_run_dir`), and :func:`reap_scratch` removes only the trees of
+dead processes.
 """
 
 from __future__ import annotations
 
 import contextlib
+import hashlib
 import os
+import re
+import shutil
+import tempfile
+import uuid
+from typing import Callable
 
 from pyspark.sql import SparkSession
 
@@ -47,88 +60,93 @@ QUERY_CONF = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
-_SCRATCH_TTL_SEC = 6 * 3600
 _reaped = False
 
 
-def touch_scratch_tag(path: str) -> None:
-    """Refresh a tag-keyed scratch subdir's mtime on REUSE (r12 verdict #3:
-    a live process reusing a >TTL-old tag could race a concurrently starting
-    process's :func:`reap_scratch`, which keys staleness on the tag dir's
-    own mtime).  Every ``_DONE``-guarded builder calls this on its reuse
-    path, so a tag in active use always looks fresh to the reaper."""
-    import time
+def scratch_dir(kind: str, *key) -> str:
+    """``<tmp>/abspark_<pid>/<kind>/<md5(key)>``: this process's scratch for
+    ``key`` (typically the absolute sf_dir).
 
+    Only this process writes under ``abspark_<pid>``, so nothing else can
+    reap or rebuild it while it is in use.  The temp dir is read at call
+    time: a harness may point ``tempfile.tempdir`` elsewhere after import."""
+    tag = hashlib.md5(":".join(map(str, key)).encode()).hexdigest()[:8]
+    return os.path.join(tempfile.gettempdir(), f"abspark_{os.getpid()}", kind, tag)
+
+
+def build_once(path: str, build: Callable[[str], None]) -> str:
+    """Return ``path``, first running ``build(tmp)`` if it does not exist.
+
+    ``build`` writes a new directory at ``tmp``, a uuid sibling of ``path``,
+    which is then renamed onto ``path``; so ``path`` existing means the
+    build is complete.  Threads that race on a cold ``path`` each build,
+    the first rename wins and the others drop their copy."""
+    if os.path.isdir(path):
+        return path
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = f"{path}.{uuid.uuid4().hex}"
     try:
-        now = time.time()
-        os.utime(path, (now, now))
-    except OSError:
-        pass
+        build(tmp)
+        try:
+            os.rename(tmp, path)
+        except OSError:
+            if not os.path.isdir(path):  # not a lost race
+                raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return path
 
 
-def _stale(path: str, ttl_sec: int) -> bool:
-    """True when ``path`` is a directory last touched more than ``ttl_sec`` ago."""
-    import time
+def fresh_run_dir(base: str, prefix: str) -> str:
+    """A new ``<base>/<prefix>-<uuid>`` path (not created), after removing
+    the earlier ``<prefix>-*`` run dirs under ``base``; so two runs that
+    share ``base`` and ``prefix`` must not overlap.
 
+    The ``-`` keeps one prefix from matching another that extends it
+    (``ckpt-sink-*`` vs ``ckpt-sink_rocksdb-*``)."""
+    with contextlib.suppress(FileNotFoundError):
+        for e in os.listdir(base):
+            if e.startswith(prefix + "-"):
+                shutil.rmtree(os.path.join(base, e), ignore_errors=True)
+    return os.path.join(base, f"{prefix}-{uuid.uuid4().hex[:12]}")
+
+
+def _alive(pid: int) -> bool:
     try:
-        return os.path.isdir(path) and time.time() - os.stat(path).st_mtime > ttl_sec
-    except OSError:
+        os.kill(pid, 0)
+    except ProcessLookupError:
         return False
+    except OSError:  # EPERM: another user's live process
+        pass
+    return True
 
 
-def reap_scratch(ttl_sec: int = _SCRATCH_TTL_SEC) -> list[str]:
-    """Reap orphaned ``abspark_*`` scratch under the system temp dir (r11
-    verdict #5: ~35 dead-pid tags had accumulated across rounds).  Two
-    classes, both safe-by-construction:
+def reap_scratch() -> list[str]:
+    """Remove the ``abspark_<pid>`` (and older ``abspark_<name>_<pid>``)
+    scratch trees under the temp dir whose process is dead; returns them.
 
-    - ``abspark_<name>_<pid>`` directories whose pid is DEAD (pid-keyed
-      scratch is only ever touched by its owner, so a dead owner means the
-      tree is garbage);
-    - tag-keyed cache subdirs (``abspark_ttbatch/<md5>``,
-      ``abspark_sink_strikes/<md5>``, ...) older than ``ttl_sec`` — their
-      builders are idempotent behind ``_DONE``/marker guards, so a reaped
-      tag is rebuilt on next use, never corrupted.
-
-    Top-level non-pid dirs themselves (``abspark_bucketed`` etc.) are
-    persistent caches and are left alone.  Each stale tag is re-stat'ed
-    just before its ``rmtree``: a live owner that touched it after the scan
-    (:func:`touch_scratch_tag`) keeps it.  Returns the removed paths."""
-    import re
-    import shutil
-    import tempfile
-
-    removed: list[str] = []
+    On the first call in a process it also removes the tree of this
+    process's own pid, which an earlier, dead process with the same pid
+    left behind.  A live process's tree is never touched."""
+    global _reaped
     tmp = tempfile.gettempdir()
     try:
-        entries = [e for e in os.listdir(tmp) if e.startswith("abspark_")]
+        entries = os.listdir(tmp)
     except OSError:
-        return removed
+        return []
+    removed = []
     for e in entries:
+        m = re.fullmatch(r"abspark_(?:.*_)?(\d+)", e)
+        if not m:
+            continue
+        pid = int(m.group(1))
+        in_use = _reaped if pid == os.getpid() else _alive(pid)
+        if in_use:
+            continue
         path = os.path.join(tmp, e)
-        if not os.path.isdir(path):
-            continue
-        m = re.match(r".*_(\d+)$", e)
-        if m:
-            pid = int(m.group(1))
-            if pid != os.getpid():
-                try:
-                    os.kill(pid, 0)
-                except ProcessLookupError:
-                    shutil.rmtree(path, ignore_errors=True)
-                    removed.append(path)
-                except OSError:
-                    pass
-            continue
-        # tag-keyed cache: reap only STALE subdirs, keep the parent
-        try:
-            subs = os.listdir(path)
-        except OSError:
-            continue
-        stale = [sp for sp in (os.path.join(path, s) for s in subs) if _stale(sp, ttl_sec)]
-        for sp in stale:
-            if _stale(sp, ttl_sec):
-                shutil.rmtree(sp, ignore_errors=True)
-                removed.append(sp)
+        shutil.rmtree(path, ignore_errors=True)
+        removed.append(path)
+    _reaped = True
     return removed
 
 
@@ -139,9 +157,7 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) the SparkSession with engine defaults."""
-    global _reaped
     if not _reaped:
-        _reaped = True
         reap_scratch()
     # Parallelism belongs to Spark, not to BLAS: numpy kernels inside Pandas
     # UDFs already run in one Python worker per core — letting OpenBLAS spawn
@@ -149,6 +165,12 @@ def get_spark(
     # wall-clock swings on the sgemm dedup kernel).  Workers inherit this env.
     for var in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS"):
         os.environ.setdefault(var, "1")
+    # Python workers unpickle UDFs that import this package: put its parent
+    # dir on their path, whatever the driver's cwd or sys.path.
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if root not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([root, *paths])
     cpus = cpus or DEFAULT_CPUS
     shuffle_partitions = shuffle_partitions or cpus
     builder = (

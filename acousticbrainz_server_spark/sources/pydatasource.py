@@ -269,12 +269,9 @@ class JsonLinesStreamWriter(DataSourceStreamWriter):
     ``fail_at_batch`` raises inside ``commit()`` for that batch exactly
     once (a marker file records the strike); ``fail_point`` selects the
     crash side — ``before_manifest`` (default) or ``after_manifest``.
-    Strike markers live OUTSIDE the data directory, under a tmp-area tag
-    keyed by the sink path (``abspark_sink_strikes/<md5(path)>``), so the
-    committed output directory only ever contains parts + manifests —
-    external consumers listing it never see test debris, and the tag is
-    reaped by the same dead-pid TTL sweep as every other ``abspark_*``
-    scratch area.
+    Strike markers live OUTSIDE the data directory, in ``<path>.strikes/``
+    beside it, so external consumers listing the output never see test
+    debris, and the markers go wherever the output's parent directory goes.
 
     Deployment constraint: same shared-filesystem assumption as
     JsonLinesWriter (driver renames executor-written temps).
@@ -290,15 +287,13 @@ class JsonLinesStreamWriter(DataSourceStreamWriter):
         self.fail_point = options.get("fail_point", "before_manifest")
 
     def _strike_path(self, batch_id: int) -> str:
-        """One-shot fail-injection marker for ``batch_id`` — kept under a
-        tmp-area tag keyed by the sink path, NOT in the data directory, so
-        the sink's output stays parts + manifests only (ADVICE r11)."""
-        import hashlib
+        """One-shot fail-injection marker for ``batch_id``, in
+        ``<path>.strikes/``, NOT in the data directory (ADVICE r11).  Not in
+        the driver's scratch tree either: ``commit()`` runs in a Python
+        worker the JVM starts, whose pid is not the driver's."""
         import os
-        import tempfile
 
-        tag = hashlib.md5(os.path.abspath(self.path).encode()).hexdigest()[:12]
-        d = os.path.join(tempfile.gettempdir(), "abspark_sink_strikes", tag)
+        d = os.path.normpath(self.path) + ".strikes"
         os.makedirs(d, exist_ok=True)
         return os.path.join(d, f"strike-{batch_id}")
 

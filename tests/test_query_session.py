@@ -70,12 +70,14 @@ def test_streaming_query_leaves_no_listener_or_view_on_caller(spark):
 
 # A mix of batch, streaming (memory sink, RocksDB state, stream-stream join),
 # Python UDTF, data-source and stream-writer registration and temp-view
-# queries, plus one that writes and re-reads scratch files.
+# queries, plus one that writes and re-reads scratch files and two that
+# build the same scratch backlog (session.build_once).
 _MIXED = (
     "streaming_interval_join",
     "streaming_watermark_audit_rocksdb",
     "dump_incremental_window",
     "streaming_python_sink_rollup",
+    "streaming_observe_metrics",
     "streaming_python_source_rollup",
     "python_udtf_chunk_profile",
     "pricing_summary",
@@ -90,9 +92,9 @@ def _hash(spark, name: str) -> tuple[int, str]:
 
 def test_registered_queries_run_concurrently_on_one_context(spark):
     views = _temp_views(spark)
-    serial = {name: _hash(spark, name) for name in _MIXED}  # builds scratch
     with ThreadPoolExecutor(max_workers=4) as pool:
         threaded = dict(zip(_MIXED, pool.map(lambda n: _hash(spark, n), _MIXED, timeout=900)))
+    serial = {name: _hash(spark, name) for name in _MIXED}
     assert threaded == serial
     assert _temp_views(spark) == views
     assert spark.conf.get("spark.sql.shuffle.partitions") == "4"

@@ -1,92 +1,93 @@
-"""Scratch-reaper TTL semantics (r12 verdict #3: reuse-after-TTL race).
+"""Per-process scratch tree: reaper rules and the build-once helper.
 
-A tag-keyed cache subdir whose mtime exceeded the TTL used to be reapable
-even while a LIVE long-running process was about to reuse it.  The fix:
-every ``_DONE``-guarded builder touches its tag dir on the reuse path
-(:func:`touch_scratch_tag`), so a tag in active use always looks fresh.
+Each process keeps its scratch under ``<tmp>/abspark_<pid>/``, so the
+reaper can tell garbage from a tree in use by the pid alone: a dead pid's
+tree goes, a live one's stays.  None of these tests start Spark; each
+points ``tempfile.tempdir`` at its own ``tmp_path``.
 """
 
 from __future__ import annotations
 
 import os
+import subprocess
 import tempfile
+import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
 
-from acousticbrainz_server_spark.session import reap_scratch, touch_scratch_tag
+import pytest
 
-SF_SMOKE = "/root/testdata/sf0.001"
-
-
-def _age(path: str, sec: float) -> None:
-    old = time.time() - sec
-    os.utime(path, (old, old))
+from acousticbrainz_server_spark import session
+from acousticbrainz_server_spark.session import build_once, reap_scratch, scratch_dir
 
 
-def test_reap_removes_stale_tag_but_keeps_touched(tmp_path):
-    base = os.path.join(tempfile.gettempdir(), "abspark_ttltest")
-    stale = os.path.join(base, "deadtag0")
-    fresh = os.path.join(base, "livetag0")
-    for d in (stale, fresh):
-        os.makedirs(d, exist_ok=True)
-        open(os.path.join(d, "_DONE"), "w").write("ok\n")
-        _age(d, 10 * 3600)
-    # the live process's reuse path touches its tag before the reaper fires
-    touch_scratch_tag(fresh)
-    removed = reap_scratch(ttl_sec=6 * 3600)
-    assert stale in removed
-    assert fresh not in removed
-    assert not os.path.isdir(stale)
-    assert os.path.isdir(fresh)
-    import shutil
-
-    shutil.rmtree(base, ignore_errors=True)
+@pytest.fixture
+def tmp_root(tmp_path, monkeypatch):
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    return tmp_path
 
 
-def test_reap_skips_tag_touched_between_scan_and_delete(monkeypatch):
-    """A live owner touching its tag AFTER the reaper's scan found it stale
-    (but before the delete) keeps it: the reaper re-stats right before
-    ``rmtree``."""
-    import shutil
+def _tree(root, name: str) -> str:
+    path = os.path.join(root, name, "ttbatch", "0123abcd", "src")
+    os.makedirs(path)
+    return os.path.join(root, name)
 
-    from acousticbrainz_server_spark import session
 
-    base = os.path.join(tempfile.gettempdir(), "abspark_ttlrace")
-    tag = os.path.join(base, "racetag0")
-    os.makedirs(tag, exist_ok=True)
-    _age(tag, 10 * 3600)
-    real_stale = session._stale
-    checks = []
+def test_dead_pid_tree_is_reaped(tmp_root):
+    child = subprocess.Popen(["true"])
+    child.wait()
+    dead = _tree(tmp_root, f"abspark_{child.pid}")
+    legacy = _tree(tmp_root, f"abspark_state_introspect_{child.pid}")
+    assert sorted(reap_scratch()) == sorted([dead, legacy])
+    assert os.listdir(tmp_root) == []
 
-    def scan_then_touch(path, ttl_sec):
-        stale = real_stale(path, ttl_sec)
-        if path == tag:
-            checks.append(stale)
-            if len(checks) == 1:
-                touch_scratch_tag(tag)  # the owner's reuse path fires here
-        return stale
 
-    monkeypatch.setattr(session, "_stale", scan_then_touch)
+def test_live_pid_tree_is_kept(tmp_root):
+    child = subprocess.Popen(["sleep", "60"])
     try:
-        removed = reap_scratch(ttl_sec=6 * 3600)
-        assert checks == [True, False]  # stale at scan, fresh at delete time
-        assert tag not in removed
-        assert os.path.isdir(tag)
+        live = _tree(tmp_root, f"abspark_{child.pid}")
+        keep = _tree(tmp_root, "abspark_bucketed")  # no pid: not ours to judge
+        assert reap_scratch() == []
+        assert os.path.isdir(live) and os.path.isdir(keep)
     finally:
-        shutil.rmtree(base, ignore_errors=True)
+        child.kill()
+        child.wait()
 
 
-def test_ttb_reuse_refreshes_ttl(spark):
-    """Real reuse path: ``_ttb_build_src`` hit twice — the second call takes
-    the ``_DONE`` short-circuit and must still refresh the tag's mtime so a
-    concurrent process's reaper no longer sees it as stale."""
-    from acousticbrainz_server_spark.plans.streaming_queries import _ttb_build_src
+def test_own_pid_leftover_is_wiped_on_first_reap_only(tmp_root, monkeypatch):
+    monkeypatch.setattr(session, "_reaped", False)
+    own = _tree(tmp_root, f"abspark_{os.getpid()}")
+    assert reap_scratch() == [own]  # left by a dead process with our pid
+    path = scratch_dir("ttbatch", "/some/sf")
+    assert path.startswith(own + os.sep)
+    os.makedirs(path)
+    assert reap_scratch() == []  # now it is this process's, in use
+    assert os.path.isdir(path)
 
-    base, src_dir = _ttb_build_src(spark, SF_SMOKE)
-    assert os.path.exists(os.path.join(src_dir, "_DONE"))
-    _age(base, 10 * 3600)
-    base2, _ = _ttb_build_src(spark, SF_SMOKE)  # reuse path
-    assert base2 == base
-    assert time.time() - os.stat(base).st_mtime < 3600
-    removed = reap_scratch(ttl_sec=6 * 3600)
-    assert base not in removed
-    assert os.path.isdir(src_dir)
+
+def test_build_once_from_threads_on_a_cold_path(tmp_root):
+    path = scratch_dir("ttbatch", "/some/sf")
+    started = threading.Barrier(4)
+    builds = []
+
+    def slow_build(tmp: str) -> None:
+        builds.append(tmp)
+        os.makedirs(tmp)
+        for i in range(3):
+            time.sleep(0.1)
+            with open(os.path.join(tmp, f"f{i}.parquet"), "w") as f:
+                f.write(tmp)
+
+    def call(_):
+        started.wait(timeout=60)
+        got = build_once(path, slow_build)
+        return got, sorted(os.listdir(got))
+
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        results = list(pool.map(call, range(4), timeout=120))
+    assert len(builds) == 4  # all four found the path cold
+    assert results == [(path, ["f0.parquet", "f1.parquet", "f2.parquet"])] * 4
+    assert os.listdir(os.path.dirname(path)) == [os.path.basename(path)]
+    winner = open(os.path.join(path, "f0.parquet")).read()
+    assert all(open(os.path.join(path, f"f{i}.parquet")).read() == winner for i in range(3))
+    assert build_once(path, slow_build) == path and len(builds) == 4  # warm: no build

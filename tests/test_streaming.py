@@ -5,12 +5,12 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
 import pytest
 from datetime import datetime, timedelta
 
 import random
-import uuid
 
 from pyspark.sql import functions as F
 
@@ -835,11 +835,7 @@ def test_python_stream_sink_kill_resume(spark, tmp_path, fail_point):
 
     register_jsonlines_sink(spark)
     _base, src = _ttb_build_src(spark, "/root/testdata/sf0.001")
-    # the sink's one-shot strike marker is keyed by the sink path and lives
-    # for the scratch TTL, while pytest reuses tmp_path names across runs:
-    # a unique sink path keeps an earlier run's marker from disarming this
-    # run's injected failure
-    out = str(tmp_path / f"out-{uuid.uuid4().hex[:8]}")
+    out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")  # PINNED ckpt
 
     q = (
@@ -881,6 +877,10 @@ def test_python_stream_sink_kill_resume(spark, tmp_path, fail_point):
     got = _committed_event_ids(spark, out)
     assert len(got) == len(expect), (len(got), len(expect))  # no loss, no doubling
     assert got == expect
+    # the strike marker sits beside the output; the output is parts + manifests
+    assert os.listdir(out + ".strikes") == ["strike-2"]
+    names = sorted(os.listdir(out))
+    assert all(re.fullmatch(r"part-b\d{5}-\d{5}\.jsonl|_batch-\d+\.json", n) for n in names), names
 
 
 # --------------------------------------------------------------------------------------

@@ -24,17 +24,15 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import shutil
 import sys
 import time
-import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
 from acousticbrainz_server_spark.functions.scalar import round_half_up
-from acousticbrainz_server_spark.session import get_spark
+from acousticbrainz_server_spark.session import fresh_run_dir, get_spark
 
 
 def rollup(df):
@@ -65,10 +63,7 @@ def run_native(spark, sf_dir: str):
 
     t0 = time.time()
     base, src_dir = _ttb_build_src(spark, sf_dir)
-    for stale in os.listdir(base):
-        if stale.startswith("fbsink-"):
-            shutil.rmtree(os.path.join(base, stale), ignore_errors=True)
-    run = os.path.join(base, f"fbsink-{uuid.uuid4().hex[:8]}")
+    run = fresh_run_dir(base, "fbsink")
     out, ckpt = os.path.join(run, "out"), os.path.join(run, "ckpt")
 
     def write_batch(batch_df, batch_id):
