@@ -50,20 +50,12 @@ def connected_components(
     src_col: str = "src",
     dst_col: str = "dst",
     max_iter: int = 20,
-    dedupe_edges: bool = False,
 ) -> DataFrame:
     """(id, component) — component = min node id reachable via edges.
 
     ``nodes``: one row per vertex.  ``edges``: undirected pairs (either
-    orientation).  Isolated vertices keep their own id as component.
-
-    ``dedupe_edges=True`` dedups the symmetrized edge relation INSIDE the
-    exchange this function already pays (r13): hash(a) partitioning
-    satisfies the (a, b) clustering a distinct needs, so the dedup
-    aggregate runs in place with zero extra shuffles.  Pair producers that
-    would otherwise pay their own dedup shuffle (near-dup banding joins
-    emit a hamming<=3 pair once per agreeing band) should pass their raw
-    stream here instead — one whole shuffle stage less end-to-end.
+    orientation, duplicates allowed).  Isolated vertices keep their own id
+    as component.
     """
     _require_integral_ids(
         "connected_components",
@@ -72,15 +64,18 @@ def connected_components(
         edge_dst=(edges, dst_col),
     )
     # duplicate edges are harmless under the min-aggregate, so there is no
-    # UNCONDITIONAL distinct(); callers with a cheap pre-deduped relation
-    # skip it, callers with multiplicity fold it into the exchange below.
+    # distinct() here.  Folding one into the exchange below (in place, since
+    # hash(a) satisfies the (a, b) clustering) and handing it the banding
+    # join's raw pairs lost to the producer's own dedup shuffle on
+    # neardup_cluster_assign: sf0.1, 6 interleaved trials, min 5.82 vs
+    # 5.12 s, slower in 6/6 pairs and more CPU in 5/6 (VERDICT1AB.json).
     #
     # symmetrize with ONE pass (explode of both orientations), not a
     # self-union: a union reads the edge subtree twice, and when the caller
-    # hands a non-materialized pipeline (e.g. the banding join with its
-    # dedup deferred here) each branch would re-execute the whole producer —
-    # measured r13: the unioned raw-pairs variant was ~25% SLOWER than
-    # paying a separate dedup shuffle, entirely from that double execution.
+    # hands a non-materialized pipeline (e.g. the banding join) each branch
+    # would re-execute the whole producer — measured r13: the unioned
+    # raw-pairs variant was ~25% SLOWER than paying a separate dedup
+    # shuffle, entirely from that double execution.
     # The explode runs the producer once and doubles rows in place.
     #
     # hash-partition by the per-round join key ONCE at cache time (guide
@@ -101,15 +96,8 @@ def connected_components(
         )
         .select("e.a", "e.b")
         .repartition("a")
+        .cache()
     )
-    if dedupe_edges:
-        # zero-exchange dedup: HashPartitioning(a) satisfies
-        # ClusteredDistribution([a, b]) (partition keys ⊆ grouping keys), so
-        # this plans as one in-place aggregate over the repartition output —
-        # the cached relation is multiplicity-free and keeps hash(a)
-        # partitioning (aggregates preserve their child's partitioning)
-        sym = sym.dropDuplicates(["a", "b"])
-    sym = sym.cache()
     # only vertices that HAVE edges iterate; isolated vertices (the vast
     # majority of any near-dup graph) are singleton components by definition
     # and rejoin at the end — the fixpoint loop runs on the edge-touched
@@ -323,15 +311,12 @@ def neardup_clusters(
     docs: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    dedupe_edges: bool = False,
 ) -> DataFrame:
     """(doc_id, cluster_id, cluster_size) from near-dup candidate pairs.
 
     ``cluster_id`` = min doc_id in the connected component; singletons get
     their own id with size 1.  Downstream dedup keeps ``doc_id ==
-    cluster_id`` rows as canonicals.  ``dedupe_edges=True`` accepts a raw
-    pair stream with multiplicity (e.g. banding joins with ``dedupe=False``)
-    and folds the dedup into the component loop's own exchange.
+    cluster_id`` rows as canonicals.
     """
     comp = connected_components(
         docs.select(id_col),
@@ -339,7 +324,6 @@ def neardup_clusters(
         id_col=id_col,
         src_col="doc_a",
         dst_col="doc_b",
-        dedupe_edges=dedupe_edges,
     )
     sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))
     return (

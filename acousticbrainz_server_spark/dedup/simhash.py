@@ -86,7 +86,6 @@ def simhash_neardup_pairs(
     max_hamming: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    dedupe: bool = True,
 ) -> DataFrame:
     """Near-dup pairs by banded simhash join (4 bytes; hamming<=3 ⇒ ≥1 equal byte).
 
@@ -97,12 +96,10 @@ def simhash_neardup_pairs(
     against a bandless all-pairs SQL oracle.  One fingerprint shuffle + one
     band-bucket join; no cross product at any scale.
 
-    The hamming filter runs BEFORE the pair dedup, so the dedup shuffle
-    carries only surviving near-dup pairs (~0.1% of candidates), not the
-    full candidate stream.  ``dedupe=False`` skips that shuffle entirely for
-    consumers that tolerate multiplicity (a hamming<=3 pair in k shared
-    bytes appears k times) — e.g. connected-components clustering, whose
-    min-aggregate is idempotent.
+    The hamming filter runs BEFORE the pair dedup (a hamming<=3 pair in k
+    shared bytes appears k times), so the dedup shuffle carries only
+    surviving near-dup pairs (~0.1% of candidates), not the full candidate
+    stream.
     """
     sig = simhash(docs, id_col, text_col)
     banded = sig.select(
@@ -125,4 +122,4 @@ def simhash_neardup_pairs(
         .select("doc_a", "doc_b", hamming_distance(F.col("sh_a"), F.col("sh_b")).alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
     )
-    return pairs.dropDuplicates(["doc_a", "doc_b"]) if dedupe else pairs
+    return pairs.dropDuplicates(["doc_a", "doc_b"])

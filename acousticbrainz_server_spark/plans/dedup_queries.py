@@ -234,16 +234,15 @@ def neardup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..dedup.simhash import simhash_neardup_pairs
 
     d = load_table(spark, sf_dir, "documents")
-    # raw (multiplicity ~1.8x) pairs, deduped INSIDE the component loop's own
-    # repartition("a") exchange (dedupe_edges=True — hash(a) satisfies the
-    # (a,b) clustering, so the distinct is in-place).  The real r13 win is in
-    # connected_components' symmetrization: explode of both orientations runs
-    # the banding-join pipeline ONCE, where the r12 union re-executed the
-    # whole post-exchange join+filter+dedup per branch (plan pair:
-    # plans/r13/neardup_pairs_sym_{before,after}.txt, 24 -> 14 plan nodes;
-    # interleaved A/B min 7.56 -> 7.06 s, new shape won 4/5 trials)
-    pairs = simhash_neardup_pairs(d, max_hamming=3, dedupe=False)
-    return neardup_clusters(d, pairs, id_col="doc_id", dedupe_edges=True)
+    # deduped pairs (their own shuffle, after the hamming filter); the r13
+    # win is in connected_components' symmetrization: explode of both
+    # orientations runs the banding-join pipeline ONCE, where the r12 union
+    # re-executed the whole post-exchange join+filter+dedup per branch (plan
+    # pair: plans/r13/neardup_pairs_sym_{before,after}.txt, 24 -> 14 plan
+    # nodes).  Deferring the dedup into the component loop's exchange
+    # instead was slower (components.py, VERDICT1AB.json).
+    pairs = simhash_neardup_pairs(d, max_hamming=3)
+    return neardup_clusters(d, pairs, id_col="doc_id")
 
 
 # --------------------------------------------------------------------------------------
@@ -768,7 +767,7 @@ def _cdc_cuts_expr() -> str:
     INSIDE the generator's input expression: projecting the codes array in a
     column below the explode re-executes the split per generated row under
     whole-stage codegen's deferred evaluation (measured 18-58x slower, OOM
-    at L=20k — see tools/text_ab.py header).
+    at L=20k).
     """
     terms = " + ".join(
         f"CAST(element_at(cs, i + {j}) AS BIGINT) * {31 ** (_CDC_W - 1 - j)}L"

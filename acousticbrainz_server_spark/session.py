@@ -232,7 +232,7 @@ def query_scope(spark: SparkSession, conf: dict[str, str] | None = None):
     Active, because some Spark paths resolve names on the thread's active
     session rather than the DataFrame's: a stream written to a Python data
     source registered on the child is one.  On exit, the streaming listener
-    buses registered meanwhile are detached (:func:`_detach_stream_buses`)."""
+    buses registered meanwhile are detached (:func:`detach_stream_buses`)."""
     sessions = spark.sparkContext._jvm.SparkSession
     bus = spark.sparkContext._jsc.sc().listenerBus()
     before = bus.listeners()
@@ -246,10 +246,10 @@ def query_scope(spark: SparkSession, conf: dict[str, str] | None = None):
             sessions.setActiveSession(caller.get())
         else:
             sessions.clearActiveSession()
-        _detach_stream_buses(spark, bus, before)
+        detach_stream_buses(spark, bus, before)
 
 
-def _detach_stream_buses(spark: SparkSession, bus, before) -> None:
+def detach_stream_buses(spark: SparkSession, bus, before) -> None:
     """Remove from ``bus`` (the context's ``LiveListenerBus``) each
     ``StreamingQueryListenerBus`` not in ``before`` that has no listener.
 

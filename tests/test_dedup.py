@@ -104,11 +104,10 @@ def test_connected_components_shapes(spark):
     assert cl[3] == (1, 5) and cl[8] == (6, 3) and cl[9] == (9, 1)
 
 
-def test_connected_components_dedupe_edges_with_multiplicity(spark):
-    """r13 fused-dedup path: a raw pair stream with multiplicity (each edge
-    repeated, both orientations, self-agreeing duplicates) through
-    dedupe_edges=True labels identically to the pre-deduped path, and the
-    explode symmetrization covers edges given in EITHER orientation."""
+def test_connected_components_edges_with_multiplicity(spark):
+    """A raw pair stream with multiplicity (each edge repeated, both
+    orientations) labels identically to the deduped one, and the explode
+    symmetrization covers edges given in EITHER orientation."""
     from acousticbrainz_server_spark.dedup.components import connected_components, neardup_clusters
 
     nodes = spark.createDataFrame([(i,) for i in range(1, 9)], "id long")
@@ -116,7 +115,7 @@ def test_connected_components_dedupe_edges_with_multiplicity(spark):
     raw = base * 3 + [(b, a) for a, b in base]  # 3x multiplicity + flipped copies
     edges_raw = spark.createDataFrame(raw, "src long, dst long")
     edges_clean = spark.createDataFrame(base, "src long, dst long")
-    a = {r["id"]: r["component"] for r in connected_components(nodes, edges_raw, dedupe_edges=True).collect()}
+    a = {r["id"]: r["component"] for r in connected_components(nodes, edges_raw).collect()}
     b = {r["id"]: r["component"] for r in connected_components(nodes, edges_clean).collect()}
     assert a == b == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 6, 7: 6, 8: 8}
 
@@ -124,7 +123,7 @@ def test_connected_components_dedupe_edges_with_multiplicity(spark):
     pairs_raw = edges_raw.select(F.col("src").alias("doc_a"), F.col("dst").alias("doc_b"))
     cl = {
         r["doc_id"]: (r["cluster_id"], r["cluster_size"])
-        for r in neardup_clusters(docs, pairs_raw, dedupe_edges=True).collect()
+        for r in neardup_clusters(docs, pairs_raw).collect()
     }
     assert cl[3] == (1, 3) and cl[5] == (4, 2) and cl[8] == (8, 1)
 

@@ -5,14 +5,19 @@
 plan or source module sets conf on the session it is handed, a streaming
 query leaves no listener and no sink view behind on the caller, and
 queries run from several threads on one SparkContext give the serial
-answers and leave the caller's session as it was.
+answers and leave the caller's session as it was.  Streams that tests
+start directly, outside ``query_scope``, are swept by the autouse fixture
+in ``conftest.py``.
 """
 
 from __future__ import annotations
 
 import ast
+import json
 from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
+
+import pytest
 
 from acousticbrainz_server_spark.plans.registry import QUERIES, _load_all
 from acousticbrainz_server_spark.session import QUERY_CONF, query_session
@@ -66,6 +71,37 @@ def test_streaming_query_leaves_no_listener_or_view_on_caller(spark):
         assert fn(spark, SF_SMOKE).count() > 0
     assert _listeners(spark) == before
     assert _temp_views(spark) == views
+
+
+@pytest.fixture(scope="module")
+def direct_stream_listener_counts(spark):
+    spark.range(1).count()  # the first SQL execution adds SQLAppStatusListener for good
+    return []
+
+
+@pytest.mark.parametrize("run", range(3))
+def test_direct_streams_leave_listener_count_flat(spark, tmp_path, direct_stream_listener_counts, run):
+    """A stateful stream started on ``spark`` itself registers listener
+    buses that ``query_scope`` never sees; the conftest sweep after each
+    test must bring the count back, so every run starts at the same count."""
+    from pyspark.sql.types import StringType, StructField, StructType, TimestampType
+
+    from acousticbrainz_server_spark.streaming.ingest_stream import stream_ingest_stateful
+
+    counts = direct_stream_listener_counts
+    counts.append(_listeners(spark))
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    (in_dir / "part.json").write_text(
+        "\n".join(json.dumps({"gid": f"g{i % 2}", "submitted": f"2024-05-01T0{i}:00:00"}) for i in range(3))
+    )
+    q = stream_ingest_stateful(
+        spark, str(in_dir), str(tmp_path / "out"), str(tmp_path / "ck"),
+        schema=StructType([StructField("gid", StringType()), StructField("submitted", TimestampType())]),
+    )
+    q.awaitTermination(120)
+    assert spark.read.parquet(str(tmp_path / "out")).count() == 3
+    assert counts == counts[:1] * len(counts), counts
 
 
 # A mix of batch, streaming (memory sink, RocksDB state, stream-stream join),

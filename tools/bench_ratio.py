@@ -96,8 +96,9 @@ EXCHANGE_BOUND_RATIO_CEILINGS_SF01 = {
 }
 
 
-def duck_times(sf_dir: str, runs: int = 2) -> dict[str, float]:
-    """Best-of-N DuckDB wall time per oracle, full materialization."""
+def duck_times(sf_dir: str, runs: int = 2, names: set[str] | None = None) -> dict[str, float]:
+    """Best-of-N DuckDB wall time per oracle (of ``names``, default all),
+    full materialization."""
     import duckdb
 
     con = duckdb.connect()
@@ -107,7 +108,7 @@ def duck_times(sf_dir: str, runs: int = 2) -> dict[str, float]:
         )
     out: dict[str, float] = {}
     for name, spec in sorted(QUERIES.items()):
-        if spec.oracle is None:
+        if spec.oracle is None or (names is not None and name not in names):
             continue
         best = None
         for _ in range(runs):

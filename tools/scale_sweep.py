@@ -1,14 +1,13 @@
-"""Registry-wide 10x scale sweep: hunt plan cliffs the small SF cannot show.
+"""The sf1 corpus: every sf0.1 table 10x by key-shifted replication.
 
-Builds a FULL sf1-scale testdata dir under ``.scale/sf1full/`` — every table
-10x by key-shifted replication, foreign keys shifted CONSISTENTLY so joins
-keep TPC-H cardinality shape (each replica is a disjoint sub-database, which
-is exactly how TPC-H grows with SF) — then times EVERY registered query once
-cold at sf0.1 and sf1 (Spark only; no oracles) and reports the per-query
-wall growth factor.  A query whose wall grows far beyond the data growth is
-a scale cliff: a quadratic stage, a driver pull, a mis-gated plan.  This
-caught dedup/ngram.py's memory-gated-but-cost-blind dense sgemm in round 7
-(125s at sf1; the join path does it in 18s).
+``build_scaled()`` writes ``.scale/sf1full/`` under the repo root, with
+foreign keys shifted CONSISTENTLY so joins keep TPC-H cardinality shape
+(each replica is a disjoint sub-database, which is exactly how TPC-H grows
+with SF).  Time queries on it with ``tools/ab.py``: a variant
+``{"sf": ".scale/sf1full"}`` against the sf0.1 base gives each query's
+wall growth (``wall_ratio``), which is how the round-7 sweep caught
+dedup/ngram.py's memory-gated-but-cost-blind dense sgemm (125 s at sf1; the
+join path does it in 18 s).
 
 Shifts per replica k (replica 0 byte-identical to sf0.1):
 - orders.o_orderkey / lineitem.l_orderkey          += k * (max+1)
@@ -22,25 +21,17 @@ Shifts per replica k (replica 0 byte-identical to sf0.1):
 
 Timestamps/dates are NOT shifted: real SF growth densifies per-day volume.
 
-Usage: python tools/scale_sweep.py [--flag-ratio N] [name ...]
+Usage: python tools/scale_sweep.py   (prints the corpus dir)
 """
 
 from __future__ import annotations
 
-import json
 import os
 import re
-import sys
-import time
-
-sys.path.insert(0, "/root/repo")
 
 SRC = "/root/testdata/sf0.1"
-DST = "/root/repo/.scale/sf1full"
+DST = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scale", "sf1full")
 REPLICAS = 10
-# external-format / filesystem-writing / streaming queries whose wall is
-# dominated by fixed machinery, and the two giant-by-design exact baselines
-PER_QUERY_TIMEOUT_HINT = 600  # documentation only; driver enforces globally
 
 
 def build_scaled() -> None:
@@ -108,53 +99,6 @@ def build_scaled() -> None:
     open(os.path.join(DST, "_READY"), "w").write("ok\n")
 
 
-def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    flag_ratio = 15.0
-    for a in sys.argv[1:]:
-        if a.startswith("--flag-ratio"):
-            flag_ratio = float(a.split("=", 1)[1])
-    build_scaled()
-
-    from pyspark.sql import SparkSession
-
-    from acousticbrainz_server_spark.plans.registry import QUERIES, _load_all
-
-    _load_all()
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("scale-sweep")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "48g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(32).repartition(32).mapInPandas(lambda it: it, "id LONG").count()
-
-    names = args or list(QUERIES)
-    out = {}
-    for name in names:
-        spec = QUERIES[name]
-        row = {}
-        try:
-            for label, sf in (("sf01", SRC), ("sf1", DST)):
-                t0 = time.perf_counter()
-                spec.spark_fn(spark, sf).collect()
-                row[label] = round(time.perf_counter() - t0, 2)
-            row["growth"] = round(row["sf1"] / max(row["sf01"], 0.05), 1)
-        except Exception as e:  # noqa: BLE001 — sweep must survive any query
-            row["err"] = str(e).split("\n")[0][:200]
-        out[name] = row
-        flag = " <-- CLIFF?" if row.get("growth", 0) > flag_ratio else ""
-        print(name, json.dumps(row), flag, flush=True)
-        spark.catalog.clearCache()
-
-    cliffs = {n: r for n, r in out.items() if r.get("growth", 0) > flag_ratio}
-    errs = {n: r for n, r in out.items() if "err" in r}
-    print(json.dumps({"cliffs": cliffs, "errors": errs}))
-    spark.stop()
-
-
 if __name__ == "__main__":
-    main()
+    build_scaled()
+    print(DST)

@@ -103,7 +103,7 @@ def main() -> int:
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
-    spark = get_spark("verify_oracle", cpus=8)
+    spark = get_spark("verify_oracle")
     failures = []
     for name, spec in sorted(QUERIES.items()):
         if only and name not in only:
